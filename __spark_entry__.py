@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: synthesize Common-Crawl-style pages (input_hint shape)
     from sf0.001 documents, run the main-content extraction pipeline
-    (salted repartition → Arrow-batched boilerplate strip), return doc_text
+    (one shuffle-free mapInArrow boilerplate strip), return doc_text
     with a per-url byte-identity flag vs the ground-truth text column."""
     from pyspark.sql import functions as F
 

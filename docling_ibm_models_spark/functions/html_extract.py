@@ -22,7 +22,7 @@ The reference's analogous surface is the layout-label blacklist filter
 here DOM structure substitutes for geometry.
 
 Pure functions only — no Spark imports. The Spark layer wraps
-:func:`extract_main_content` in an Arrow-batched ``mapInPandas`` stage
+:func:`extract_main_content` in an Arrow-batched ``mapInArrow`` stage
 (pipeline/extract.py); nothing in this module runs per-row at the JVM
 boundary.
 """
@@ -235,15 +235,6 @@ _TOKEN_RE = re.compile(
 _ATTR_RE = re.compile(
     r"(class|id|role)\s*=\s*(?:\"([^\"]*)\"|'([^']*)'|([^\s>]+))", re.IGNORECASE
 )
-
-# Split alternatives of _TOKEN_RE for the inline loop's next-char dispatch:
-# '<' followed by '!'/'?' can only be a declaration-family token, anything
-# else only a tag — trying the 4 declaration branches on every tag token is
-# pure waste. Branch order inside each pattern matches _TOKEN_RE exactly.
-_DECL_RE = re.compile(
-    r"<!--.*?-->|<!\[CDATA\[.*?\]\]>|<![^>]*>|<\?[^>]*>", re.DOTALL
-)
-_TAG_RE = re.compile(r"<(/?)([a-zA-Z][a-zA-Z0-9:-]*)((?:\"[^\"]*\"|'[^']*'|[^>\"'])*)>")
 
 # Single-search tokenizer for the inline loop: ONE C-level ``search`` per
 # token replaces the find('<') + next-char peek + per-family ``match`` of
@@ -466,6 +457,8 @@ def _scan_blocks(html: str) -> list[Block]:
                     gt = find(">", close)
                     pos = n if gt < 0 else gt + 1
             continue
+        # every raw-text tag is a drop tag (_RAW_TEXT <= _DROP_TAGS), so raw
+        # content is skipped only in this branch and the one above
         if tag in _DROP_TAGS:
             drop = 1
             if tag in _RAW_TEXT:
@@ -504,26 +497,6 @@ def _scan_blocks(html: str) -> list[Block]:
             cur_parts = []
             cur_total = 0
             cur_link = 0
-        if tag in _RAW_TEXT:
-            # unreachable for the six current raw-text tags (all dropped
-            # above) — kept for lexicon robustness if the sets ever diverge
-            close = _find_raw_close(html, tag, pos)
-            if close < 0:
-                pos = n
-            else:
-                gt = find(">", close)
-                if tag == "a" and anchor:
-                    anchor -= 1
-                if tag == "pre" and pre:
-                    pre -= 1
-                if tag in _BLOCK_TAGS:
-                    if cur_tag is not None and cur_total:
-                        blocks.append(Block(cur_tag, cur_parts, cur_link, cur_total))
-                    cur_tag = None
-                    cur_parts = []
-                    cur_total = 0
-                    cur_link = 0
-                pos = n if gt < 0 else gt + 1
     if cur_tag is not None and cur_total:
         blocks.append(Block(cur_tag, cur_parts, cur_link, cur_total))
     return blocks

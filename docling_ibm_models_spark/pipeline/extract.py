@@ -27,9 +27,7 @@ here the only process boundary is the JVM↔Python Arrow exchange.
 from __future__ import annotations
 
 import time
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
@@ -79,9 +77,7 @@ def _extract_batches_arrow(batches):
     natively from flat offset/value arrays (``ListArray.from_arrays`` over
     a ``StructArray``) instead of per-row Python dicts that Spark's pandas
     serializer would have to re-discover, and output batches are zero-copy
-    Arrow. Cumulative wall time per partition rides along for lineage,
-    matching ``_extract_batches`` (the pandas twin kept for differential
-    testing)."""
+    Arrow. Cumulative wall time per partition rides along for lineage."""
     import pyarrow as pa
 
     span_type = pa.struct(
@@ -153,76 +149,20 @@ def _extract_batches_arrow(batches):
         )
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Arrow-batched extraction kernel (pandas twin of
-    ``_extract_batches_arrow``, kept for differential testing). Tracks
-    cumulative wall time so lineage can report per partition without a
-    second pass."""
-    t0 = time.monotonic()
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        out = {
-            "url": pdf["url"].tolist(),
-            "lang": pdf["lang"].tolist(),
-            "extracted_text": [],
-            "n_blocks": [],
-            "n_chars": [],
-            "spans": [],
-            "partition_id": pdf["partition_id"].tolist(),
-        }
-        for html in pdf["html"]:
-            text, spans = extract_main_content(html)
-            out["extracted_text"].append(text)
-            out["n_blocks"].append(len(spans))
-            out["n_chars"].append(len(text))
-            out["spans"].append(
-                [
-                    {"start": s, "end": e, "label": lbl, "block_idx": i}
-                    for s, e, lbl, i in spans
-                ]
-            )
-        wall = time.monotonic() - t0
-        res = pd.DataFrame(out)
-        res["wall_s"] = wall
-        yield res
-
-
-def extract_doc_text(
-    pages: DataFrame,
-    num_partitions: int | None = None,
-    partition_id: int | None = None,
-) -> DataFrame:
+def extract_doc_text(pages: DataFrame, partition_id: int | None = None) -> DataFrame:
     """pages (input_hint shape) → doc_text rows (+wall_s helper column).
 
-    Default: narrow map over the scan splits (no shuffle); ``partition_id``
-    tags all rows with the caller's lineage partition (file-group id). If
-    ``num_partitions`` is given instead, rows are salt-shuffled by url-hash
-    and partition_id is the salt bucket (legacy/keyed mode).
+    A narrow map over the scan splits (no shuffle). If ``pages`` already
+    carries a ``partition_id`` column (e.g. from :func:`salt_partition`) it
+    is kept; otherwise every row is tagged with the caller's lineage
+    partition ``partition_id`` (file-group id, default 0).
     """
-    if num_partitions is not None:
-        salted = salt_partition(pages, num_partitions)
-    else:
-        salted = pages.withColumn("partition_id", F.lit(int(partition_id or 0)))
+    if "partition_id" not in pages.columns:
+        pages = pages.withColumn("partition_id", F.lit(int(partition_id or 0)))
     # explicit projection: only url/lang/html/partition_id cross the Arrow
     # boundary (ground-truth `text` + warc_ts stay JVM-side / pruned at scan)
-    pruned = salted.select("url", "lang", "html", "partition_id")
+    pruned = pages.select("url", "lang", "html", "partition_id")
     return pruned.mapInArrow(_extract_batches_arrow, schema=_EXTRACT_SCHEMA)
-
-
-def extract_doc_text_pandas(
-    pages: DataFrame,
-    num_partitions: int | None = None,
-    partition_id: int | None = None,
-) -> DataFrame:
-    """mapInPandas twin of :func:`extract_doc_text` — differential-testing
-    rung only (identical rows asserted in tests/test_extraction.py)."""
-    if num_partitions is not None:
-        salted = salt_partition(pages, num_partitions)
-    else:
-        salted = pages.withColumn("partition_id", F.lit(int(partition_id or 0)))
-    pruned = salted.select("url", "lang", "html", "partition_id")
-    return pruned.mapInPandas(_extract_batches, schema=_EXTRACT_SCHEMA)
 
 
 def doc_text_clean(extracted: DataFrame) -> DataFrame:

@@ -225,30 +225,6 @@ def write_skewed_pages(
     )
 
 
-def skewed_pages_path(
-    spark, sf_dir: str, replicas: int = 4, files: int = 32, hot_frac: float = 0.9
-) -> str:
-    """Cached skewed-layout twin of :func:`cached_pages_path` (same rows,
-    hostile file distribution). Used by the bench skew probe and tests."""
-    import hashlib
-    import os
-    import tempfile
-
-    from docling_ibm_models_spark.functions import html_extract
-
-    h = hashlib.md5()
-    for mod_file in (__file__, html_extract.__file__):
-        with open(mod_file, "rb") as f:
-            h.update(f.read())
-    gen_hash = h.hexdigest()[:12]
-    key = f"{sf_dir.replace('/', '_')}-r{replicas}-f{files}-h{hot_frac}-{gen_hash}"
-    path = os.path.join(tempfile.gettempdir(), "bench_pages_cache", key, "pages_skew")
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        pages = cached_pages(spark, sf_dir, replicas=replicas)
-        write_skewed_pages(spark, pages, path, files=files, hot_frac=hot_frac)
-    return path
-
-
 def pages_from_documents(
     spark,
     sf_dir: str,

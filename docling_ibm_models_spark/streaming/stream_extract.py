@@ -21,9 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from docling_ibm_models_spark import schemas
-from docling_ibm_models_spark.pipeline.extract import (
-    _extract_batches,
-)
+from docling_ibm_models_spark.pipeline.extract import doc_text_clean, extract_doc_text
 
 
 def stream_extract(
@@ -80,15 +78,11 @@ def stream_extract_warc(
 def _run_extract_stream(
     pages: DataFrame, out_dir: str, checkpoint_dir: str, await_termination: bool
 ):
-    """Shared tail of every extraction stream: kernel -> parquet sink with
+    """Shared tail of every extraction stream: the batch path's
+    ``extract_doc_text`` (one ``mapInArrow`` stage) -> parquet sink with
     checkpoint, AvailableNow drain. One definition so the parquet and WARC
     on-ramps can never diverge in sink semantics."""
-    extracted = (
-        pages.withColumn("partition_id", F.lit(0))
-        .select("url", "lang", "html", "partition_id")
-        .mapInPandas(_extract_batches, schema=_extract_schema())
-        .drop("wall_s")
-    )
+    extracted = doc_text_clean(extract_doc_text(pages))
     q = (
         extracted.writeStream.format("parquet")
         .option("path", out_dir)
@@ -99,12 +93,6 @@ def _run_extract_stream(
     if await_termination:
         q.awaitTermination()
     return q
-
-
-def _extract_schema():
-    from docling_ibm_models_spark.pipeline.extract import _EXTRACT_SCHEMA
-
-    return _EXTRACT_SCHEMA
 
 
 def stream_events_windowed(events_stream: DataFrame) -> DataFrame:

@@ -73,10 +73,10 @@ def _block_key(blocks):
 @given(html_fragments)
 @settings(max_examples=300, deadline=None)
 def test_inline_scanner_matches_dispatch_and_stdlib(frags):
-    """Three-rung differential ladder: the merged inline loop, the
-    event-dispatch twin, and the stdlib-HTMLParser drive must produce
-    identical blocks (the inline loop is the production hot path; any
-    optimization that drifts from the slower rungs fails here)."""
+    """The merged inline loop (the production hot path) and the
+    event-dispatch twin must produce identical blocks; any optimization of
+    the inline loop that drifts from dispatch fails here. The stdlib
+    HTMLParser path is not compared."""
     from docling_ibm_models_spark.functions.html_extract import (
         _scan_blocks,
         _scan_blocks_dispatch,
@@ -91,12 +91,17 @@ def test_inline_scanner_matches_dispatch_and_stdlib(frags):
 def test_inline_scanner_raw_text_and_nesting(frags):
     """Adversarial wrapper: bury the fragment inside dropped subtrees with
     raw-text elements containing markup-like payloads — the drop-depth
-    bookkeeping of the inline loop must stay in lockstep with dispatch."""
+    bookkeeping of the inline loop must stay in lockstep with dispatch.
+    The inline loop skips raw-text content only inside dropped subtrees,
+    which is complete only while every raw-text tag is a drop tag."""
     from docling_ibm_models_spark.functions.html_extract import (
+        _DROP_TAGS,
+        _RAW_TEXT,
         _scan_blocks,
         _scan_blocks_dispatch,
     )
 
+    assert _RAW_TEXT <= _DROP_TAGS
     body = "".join(frags)
     html = (
         "<nav><script>var x = '<div>not a tag</div>';</script></nav>"

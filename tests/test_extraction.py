@@ -203,13 +203,16 @@ def test_incremental_read_consumes_only_new_partitions(spark, tmp_path):
     assert urls1 | urls2 == all_urls
 
 
-def test_arrow_and_pandas_extraction_identical(spark):
-    """The mapInArrow production path and the mapInPandas twin must emit
-    identical rows (incl. the nested spans column) — the Arrow kernel
-    builds spans natively from flat arrays, so this pins its offsets."""
-    from docling_ibm_models_spark.pipeline.extract import extract_doc_text_pandas
-
+def test_arrow_extraction_matches_kernel(spark):
+    """Every mapInArrow output row equals the pure kernel on its page,
+    including the nested spans column — the Arrow stage builds spans from
+    flat offset/value arrays, so this pins those offsets."""
     pages = pages_from_documents(spark, SF_SMALL)
-    a = doc_text_clean(extract_doc_text(pages)).orderBy("url").collect()
-    b = doc_text_clean(extract_doc_text_pandas(pages)).orderBy("url").collect()
-    assert a == b
+    html = {r.url: r.html for r in pages.select("url", "html").collect()}
+    rows = doc_text_clean(extract_doc_text(pages)).collect()
+    assert len(rows) == len(html) == 500
+    for r in rows:
+        text, spans = extract_main_content(html[r.url])
+        assert r.extracted_text == text, r.url
+        assert r.n_blocks == len(spans) and r.n_chars == len(text), r.url
+        assert [tuple(s) for s in r.spans] == spans, r.url

@@ -1,7 +1,7 @@
 """Multi-executor smoke: the extraction stage runs on REAL separate
 executor JVMs (``local-cluster``), package shipped via
-``spark.submit.pyFiles`` — the distribution mechanics behind bench.py's
-N-vs-4N-executor scaling evidence. local[N] shares the driver's JVM and
+``spark.submit.pyFiles`` — the distribution mechanics of a multi-executor
+deployment. local[N] shares the driver's JVM and
 python path; only local-cluster proves the executor-side python workers
 import the package from the shipped archive and produce byte-identical
 output. The local-cluster session runs in a SUBPROCESS (one SparkContext

@@ -6,8 +6,8 @@ of the rows in ONE parquet file. The narrow shuffle-free extraction plan
 maps scan splits 1:1 onto files at this size, so one task owns ~90% of the
 work; ``salt_partition`` (url-hash repartition) restores an even work
 distribution for one cheap shuffle of the raw bytes. The wall-clock
-crossover is measured by ``bench.py --skew-worker`` (BENCH_DETAIL.json
-``skew_probe``); this test pins the DETERMINISTIC halves of the claim:
+crossover is no longer benchmarked; this test pins the DETERMINISTIC
+halves of the claim:
 
 * the skewed layout really is skewed at the scan-partition level,
 * salting really balances it,
@@ -19,7 +19,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from docling_ibm_models_spark.pipeline.extract import doc_text_clean, extract_doc_text
+from docling_ibm_models_spark.pipeline.extract import (
+    doc_text_clean,
+    extract_doc_text,
+    salt_partition,
+)
 from docling_ibm_models_spark.sources.pages_source import (
     cached_pages,
     write_skewed_pages,
@@ -59,8 +63,6 @@ def test_skewed_layout_is_scan_skewed(spark, skew_path):
 
 def test_salting_balances_the_same_input(spark, skew_path):
     """After salt_partition the per-task work distribution is near-uniform."""
-    from docling_ibm_models_spark.pipeline.extract import salt_partition
-
     pages = spark.read.parquet(skew_path)
     salted = salt_partition(pages, 8)
     counts = _partition_counts(salted)
@@ -72,11 +74,11 @@ def test_salting_balances_the_same_input(spark, skew_path):
 
 def test_narrow_and_salted_outputs_identical(spark, skew_path):
     """Same rows out of both plans — salting changes the schedule, never
-    the result (the bench probe's chars-equality check, pinned row-level)."""
+    the result. The salted rows keep their salt bucket as partition_id."""
     pages = spark.read.parquet(skew_path)
     narrow = doc_text_clean(extract_doc_text(pages)).orderBy("url").collect()
     salted = (
-        doc_text_clean(extract_doc_text(pages, num_partitions=8))
+        doc_text_clean(extract_doc_text(salt_partition(pages, 8)))
         .orderBy("url")
         .collect()
     )
@@ -85,3 +87,4 @@ def test_narrow_and_salted_outputs_identical(spark, skew_path):
         assert a["url"] == b["url"]
         assert a["extracted_text"] == b["extracted_text"]
         assert a["n_chars"] == b["n_chars"]
+    assert {r["partition_id"] for r in salted} == set(range(8))

@@ -4,8 +4,8 @@ Shape (SURVEY.md §3, "Spark lifecycle of our engine"):
 
     pages scan (file-group pruned) → one ``mapInArrow`` stage running the
     pure-Python extraction kernel per Arrow batch (no per-row Python at
-    the JVM boundary) → doc_text rows carrying their partition_id + a
-    cumulative per-partition wall clock for lineage accounting.
+    the JVM boundary) → doc_text rows carrying their partition_id + the
+    task's cumulative wall clock, which the lineage commit observes.
 
 **Why the default path has NO shuffle.** Extraction is a narrow per-row map
 whose cost is proportional to html bytes, and parquet scan splits are
@@ -35,7 +35,7 @@ from pyspark.sql.types import DoubleType, StructField, StructType
 from docling_ibm_models_spark import schemas
 from docling_ibm_models_spark.functions.html_extract import extract_main_content
 
-# doc_text + a per-partition cumulative wall clock (consumed by lineage agg)
+# doc_text + the task's cumulative wall clock (observed by the lineage commit)
 _EXTRACT_SCHEMA = StructType(
     list(schemas.DOC_TEXT.fields) + [StructField("wall_s", DoubleType(), False)]
 )
@@ -77,7 +77,7 @@ def _extract_batches_arrow(batches):
     natively from flat offset/value arrays (``ListArray.from_arrays`` over
     a ``StructArray``) instead of per-row Python dicts that Spark's pandas
     serializer would have to re-discover, and output batches are zero-copy
-    Arrow. Cumulative wall time per partition rides along for lineage."""
+    Arrow. The task's cumulative wall time rides along for lineage."""
     import pyarrow as pa
 
     span_type = pa.struct(
@@ -169,22 +169,3 @@ def doc_text_clean(extracted: DataFrame) -> DataFrame:
     """User-facing doc_text (drops the lineage helper column)."""
     return extracted.drop("wall_s")
 
-
-def lineage_rows(extracted: DataFrame, snapshot_id: int) -> DataFrame:
-    """Aggregate per-partition lineage: (snapshot_id, partition_id,
-    doc_count, wall_s, status). Map-side-combinable hash agg — no extra
-    pass over the pages."""
-    return (
-        extracted.groupBy("partition_id")
-        .agg(
-            F.count(F.lit(1)).alias("doc_count"),
-            F.max("wall_s").alias("wall_s"),
-        )
-        .select(
-            F.lit(snapshot_id).cast("long").alias("snapshot_id"),
-            F.col("partition_id"),
-            F.col("doc_count").cast("long"),
-            F.col("wall_s"),
-            F.lit("committed").alias("status"),
-        )
-    )

@@ -6,19 +6,32 @@ sandbox has no Iceberg catalog; the layout maps 1:1 onto Iceberg file scan
 tasks + ``df.writeTo(...).append()`` + a lineage table on a real cluster):
 
 * a **snapshot_id** pins the input (deterministic hash of the input path +
-  generation params — the stand-in for an Iceberg ``VERSION AS OF``),
+  generation params — the stand-in for an Iceberg ``VERSION AS OF``); the
+  first run records the input's file-set fingerprint and group count in
+  ``out/_manifest_v2/`` and later runs refuse to resume if either drifted,
 * the input's data files are deterministically bucketed into **file
-  groups** (= lineage partitions) by sorted order; each chunk of groups is
-  one Spark write job that reads ONLY its own files (scan pruning — resume
-  never rescans committed work, unlike a row-level url-hash filter which
-  would re-read everything), extracts, appends doc_text under
+  groups** (= lineage partitions) by sorted order,
+* each chunk of groups is **one Spark job**: a single scan of ONLY the
+  chunk's files (scan pruning — resume never rescans committed work),
+  ``partition_id`` attached per row from its source file through a literal
+  file → group map, extraction, and the doc_text write under
   ``out/doc_text/partition_id=…`` with dynamic partition overwrite
-  (idempotent per partition), then appends the chunk's lineage rows under
-  ``out/lineage/``. A chunk's lineage commits only after its data commits,
-  so lineage is always an under-approximation of durable work — safe to
-  resume from.
+  (idempotent per partition). Each group's ``doc_count`` and ``wall_s``
+  are observed by that same write job (``DataFrame.observe``: result-stage
+  accumulators, so each successful task counts once) — no second pass, no
+  cached copy of the chunk,
+* after the data write commits, the driver writes the chunk's lineage
+  rows as one parquet file under ``out/lineage/`` (dot-prefixed temp name,
+  then ``os.replace``). Lineage is therefore always an under-approximation
+  of durable work — safe to resume from. A group whose files hold no rows
+  commits with ``doc_count`` 0,
 * **resume** = read lineage, select committed partition_ids for this
   snapshot, process only the complement's files.
+
+``lineage/`` and ``_manifest_v2/`` are small driver-side files read and
+written with pyarrow, so ``out_dir`` is a local directory (the same
+assumption ``atomic_dir`` makes). A missing directory reads as empty; an
+unreadable file raises rather than silently redoing or unguarding a run.
 
 Reference parity note: the reference has no incremental machinery at all
 (SURVEY.md §2.7); this module is the Spark-native capability the north rule
@@ -27,16 +40,25 @@ adds.
 
 from __future__ import annotations
 
+import os
 import zlib
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 
-from docling_ibm_models_spark.pipeline.extract import (
-    doc_text_clean,
-    extract_doc_text,
-    lineage_rows,
+from docling_ibm_models_spark import schemas
+from docling_ibm_models_spark.pipeline.extract import doc_text_clean, extract_doc_text
+
+# nullable like Spark's own parquet writer, so lineage/manifest files
+# written by earlier Spark-side commits read as one table with these
+_LINEAGE_ARROW = pa.schema([(f.name, to_arrow_type(f.dataType)) for f in schemas.LINEAGE])
+_MANIFEST_ARROW = pa.schema(
+    [("snapshot_id", pa.int64()), ("fingerprint", pa.int64()), ("num_groups", pa.int32())]
 )
 
 
@@ -81,9 +103,28 @@ def list_file_groups(
     return groups
 
 
-def _check_snapshot_manifest(
-    spark: SparkSession, out_dir: str, snapshot_id: int, groups: list[list[str]]
-) -> None:
+def _read_side_table(path: str, schema: pa.Schema, snapshot_id: int) -> pa.Table:
+    """This snapshot's rows of the driver-side parquet directory ``path``.
+    Only a missing directory reads as empty; a corrupt file raises."""
+    if not os.path.exists(path):
+        return schema.empty_table()
+    return ds.dataset(path, schema=schema, format="parquet").to_table(
+        filter=ds.field("snapshot_id") == snapshot_id
+    )
+
+
+def _write_side_file(table: pa.Table, path: str) -> None:
+    """Write ``table`` as the one parquet file ``path``: under a
+    dot-prefixed name every reader skips, then renamed into place, so a
+    reader sees the whole file or none of it."""
+    directory, name = os.path.split(path)
+    os.makedirs(directory, exist_ok=True)
+    tmp = os.path.join(directory, f".{name}.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, path)
+
+
+def _check_snapshot_manifest(out_dir: str, snapshot_id: int, groups: list[list[str]]) -> None:
     """Snapshot pinning safety (the ``VERSION AS OF`` analogue): a
     snapshot_id is a claim that (input file set, group partitioning) is
     frozen. Record the SORTED-file-list fingerprint plus the group count on
@@ -101,48 +142,36 @@ def _check_snapshot_manifest(
     # out_dir re-pins on the next run instead of silently mixing schemas
     # in one directory or false-alarming on the changed fingerprint basis.
     path = f"{out_dir}/_manifest_v2"
-    try:
-        prev = {
-            r.snapshot_id: (r.fingerprint, r.num_groups)
-            for r in spark.read.parquet(path).collect()
-        }
-    except Exception:
-        prev = {}
-    if snapshot_id in prev:
-        prev_fp, prev_ng = prev[snapshot_id]
-        if prev_fp != fingerprint:
+    prev = _read_side_table(path, _MANIFEST_ARROW, snapshot_id).to_pylist()
+    if prev:
+        if prev[0]["fingerprint"] != fingerprint:
             raise ValueError(
                 f"input file set drifted under pinned snapshot {snapshot_id}: "
                 "refusing to resume (use a new snapshot_id for new input)"
             )
-        if prev_ng != num_groups:
+        if prev[0]["num_groups"] != num_groups:
             raise ValueError(
                 f"partitioning changed under pinned snapshot {snapshot_id}: "
-                f"{prev_ng} file groups at first run vs {num_groups} now — "
+                f"{prev[0]['num_groups']} file groups at first run vs {num_groups} now — "
                 "resume with the original num_partitions/chunk size, or use "
                 "a new snapshot_id + output dir to re-partition"
             )
         return
-    spark.createDataFrame(
-        [(snapshot_id, fingerprint, num_groups)],
-        "snapshot_id long, fingerprint long, num_groups int",
-    ).write.mode("append").parquet(path)
+    row = {"snapshot_id": [snapshot_id], "fingerprint": [fingerprint], "num_groups": [num_groups]}
+    _write_side_file(
+        pa.table(row, schema=_MANIFEST_ARROW), f"{path}/part-{snapshot_id}.parquet"
+    )
 
 
 def committed_partitions(spark: SparkSession, out_dir: str, snapshot_id: int) -> set[int]:
-    try:
-        lin = spark.read.parquet(f"{out_dir}/lineage")
-    except Exception:
-        return set()
-    rows = (
-        lin.filter(
-            (F.col("snapshot_id") == snapshot_id) & (F.col("status") == "committed")
-        )
-        .select("partition_id")
-        .distinct()
-        .collect()
-    )
-    return {r.partition_id for r in rows}
+    """File groups of ``snapshot_id`` whose lineage row has committed (read
+    on the driver; ``spark`` is unused)."""
+    lin =_read_side_table(f"{out_dir}/lineage", _LINEAGE_ARROW, snapshot_id)
+    return {
+        r["partition_id"]
+        for r in lin.select(["partition_id", "status"]).to_pylist()
+        if r["status"] == "committed"
+    }
 
 
 def run_extraction(
@@ -164,26 +193,34 @@ def run_extraction(
     over raw crawl archives (sources/warc_source.py) — group = set of
     archives, scan = binaryFile + parse, everything downstream identical.
     """
-    suffix: str | tuple[str, ...]
     if input_format == "warc":
         from docling_ibm_models_spark.sources.warc_source import pages_from_warc
 
-        suffix = (".warc", ".warc.gz")
+        suffix: str | tuple[str, ...] = (".warc", ".warc.gz")
+        # the parser's warc_file is the archive path as listed
+        source = F.col("warc_file")
 
         def read_group(files: list[str]) -> DataFrame:
             return pages_from_warc(spark, files)
 
+        def source_key(f: str) -> str:
+            return f
+
     elif input_format == "parquet":
         suffix = ".parquet"
+        # the scan's file_path is the listed path, URI-encoded
+        source = F.col("_metadata.file_path")
 
         def read_group(files: list[str]) -> DataFrame:
             return spark.read.parquet(*files)
 
+        def source_key(f: str) -> str:
+            return spark._jvm.org.apache.hadoop.fs.Path(f).toUri().toString()
+
     else:
         raise ValueError(f"unknown input_format {input_format!r}")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     groups = list_file_groups(spark, pages_path, num_partitions, suffix=suffix)
-    _check_snapshot_manifest(spark, out_dir, snapshot_id, groups)
+    _check_snapshot_manifest(out_dir, snapshot_id, groups)
     num_groups = len(groups)
     chunk_partitions = chunk_partitions or num_groups
     done = committed_partitions(spark, out_dir, snapshot_id)
@@ -195,35 +232,51 @@ def run_extraction(
         chunks = chunks[:max_chunks]
 
     docs_processed = 0
-    processed_parts = 0
     for chunk in chunks:
-        # one scan per group (narrow, file-pruned), unioned into one job
-        extracted: DataFrame | None = None
+        # one scan over every file of the chunk, each row tagged with its
+        # file's group; a file outside the map would be silent data loss
+        files = [f for gid in chunk for f in groups[gid]]
+        group_of = F.create_map(
+            *[F.lit(x) for gid in chunk for f in groups[gid] for x in (source_key(f), gid)]
+        )
+        pid = F.coalesce(
+            group_of[source], F.raise_error(F.concat(F.lit("file outside its chunk: "), source))
+        )
+        extracted = extract_doc_text(read_group(files).withColumn("partition_id", pid))
+        obs = Observation()
+        counted = []
         for gid in chunk:
-            part = extract_doc_text(read_group(groups[gid]), partition_id=gid)
-            extracted = part if extracted is None else extracted.unionByName(part)
-        assert extracted is not None
-        extracted = extracted.persist()
-        try:
-            (
-                doc_text_clean(extracted)
-                .write.mode("overwrite")
-                .partitionBy("partition_id")
-                .parquet(f"{out_dir}/doc_text")
-            )
-            lin = lineage_rows(extracted, snapshot_id)
-            n = lin.agg(F.sum("doc_count")).collect()[0][0] or 0
-            lin.write.mode("append").parquet(f"{out_dir}/lineage")
-            docs_processed += int(n)
-            processed_parts += len(chunk)
-        finally:
-            extracted.unpersist()
+            hit = F.col("partition_id") == gid
+            counted += [
+                F.count_if(hit).alias(f"n{gid}"),
+                F.max(F.when(hit, F.col("wall_s"))).alias(f"w{gid}"),
+            ]
+        (
+            doc_text_clean(extracted.observe(obs, *counted))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("partition_id")
+            .parquet(f"{out_dir}/doc_text")
+        )
+        seen = obs.get
+        lineage = {
+            "snapshot_id": [snapshot_id] * len(chunk),
+            "partition_id": chunk,
+            "doc_count": [seen[f"n{gid}"] for gid in chunk],
+            "wall_s": [seen[f"w{gid}"] or 0.0 for gid in chunk],
+            "status": ["committed"] * len(chunk),
+        }
+        _write_side_file(
+            pa.table(lineage, schema=_LINEAGE_ARROW),
+            f"{out_dir}/lineage/part-{snapshot_id}-{chunk[0]:05d}.parquet",
+        )
+        docs_processed += sum(lineage["doc_count"])
 
     return RunReport(
         snapshot_id=snapshot_id,
         partitions_total=num_groups,
         partitions_done_before=len(done),
-        partitions_processed=processed_parts,
+        partitions_processed=sum(len(c) for c in chunks),
         docs_processed=docs_processed,
         chunks=len(chunks),
     )

@@ -28,7 +28,7 @@ from docling_ibm_models_spark.session import get_spark
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description="Main-content extraction over a pages table")
     ap.add_argument("--pages", required=True, help="input pages parquet dir (input_hint shape)")
-    ap.add_argument("--out", required=True, help="output dir (doc_text/ + lineage/)")
+    ap.add_argument("--out", required=True, help="local output dir (doc_text/ + lineage/)")
     ap.add_argument(
         "--format",
         choices=["parquet", "warc"],

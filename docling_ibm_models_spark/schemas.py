@@ -58,7 +58,11 @@ DOC_TEXT = StructType(
 )
 
 # ---------------------------------------------------------------------------
-# Per-partition lineage rows (north rule: resumable with lineage + metrics)
+# Per-partition lineage rows (north rule: resumable with lineage + metrics).
+# One row per committed file group: doc_count is the group's extracted rows
+# (0 for a group of empty files); wall_s is the cumulative wall of the task
+# that held the group's last row. A task may hold more than one small file,
+# so groups sharing a task share that task's clock.
 # ---------------------------------------------------------------------------
 LINEAGE = StructType(
     [

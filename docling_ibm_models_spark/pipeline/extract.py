@@ -5,7 +5,7 @@ Shape (SURVEY.md §3, "Spark lifecycle of our engine"):
     pages scan (file-group pruned) → one ``mapInArrow`` stage running the
     pure-Python extraction kernel per Arrow batch (no per-row Python at
     the JVM boundary) → doc_text rows carrying their partition_id + the
-    task's cumulative wall clock, which the lineage commit observes.
+    task's cumulative wall clock, which the lineage commit tallies.
 
 **Why the default path has NO shuffle.** Extraction is a narrow per-row map
 whose cost is proportional to html bytes, and parquet scan splits are
@@ -35,7 +35,7 @@ from pyspark.sql.types import DoubleType, StructField, StructType
 from docling_ibm_models_spark import schemas
 from docling_ibm_models_spark.functions.html_extract import extract_main_content
 
-# doc_text + the task's cumulative wall clock (observed by the lineage commit)
+# doc_text + the task's cumulative wall clock (tallied by the lineage commit)
 _EXTRACT_SCHEMA = StructType(
     list(schemas.DOC_TEXT.fields) + [StructField("wall_s", DoubleType(), False)]
 )

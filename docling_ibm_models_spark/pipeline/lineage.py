@@ -12,25 +12,30 @@ tasks + ``df.writeTo(...).append()`` + a lineage table on a real cluster):
 * the input's data files are deterministically bucketed into **file
   groups** (= lineage partitions) by sorted order,
 * each chunk of groups is **one Spark job**: a single scan of ONLY the
-  chunk's files (scan pruning — resume never rescans committed work),
-  ``partition_id`` attached per row from its source file through a literal
-  file → group map, extraction, and the doc_text write under
-  ``out/doc_text/partition_id=…`` with dynamic partition overwrite
-  (idempotent per partition). Each group's ``doc_count`` and ``wall_s``
-  are observed by that same write job (``DataFrame.observe``: result-stage
-  accumulators, so each successful task counts once) — no second pass, no
-  cached copy of the chunk,
+  chunk's files (scan pruning — resume never rescans committed work) into
+  one ``mapInArrow`` task function that tags each row with its source
+  file's group (a hash lookup in the chunk's file → group map), runs the
+  extraction kernel, and tallies each group's ``doc_count`` and ``wall_s``;
+  then the doc_text write under ``out/doc_text/partition_id=…`` with
+  dynamic partition overwrite (idempotent per partition). The tallies ride
+  back on a PySpark accumulator of that same write job — a single result
+  stage, so Spark merges each partition's tally once, from its successful
+  attempt. Every step is constant work per row, however many groups or
+  files the chunk holds; there is no second pass and no cached copy,
 * after the data write commits, the driver writes the chunk's lineage
   rows as one parquet file under ``out/lineage/`` (dot-prefixed temp name,
-  then ``os.replace``). Lineage is therefore always an under-approximation
-  of durable work — safe to resume from. A group whose files hold no rows
-  commits with ``doc_count`` 0,
+  fsync, then ``os.replace``). Lineage is therefore always an
+  under-approximation of durable work — safe to resume from. A group whose
+  files hold no rows commits with ``doc_count`` 0,
 * **resume** = read lineage, select committed partition_ids for this
   snapshot, process only the complement's files.
 
 ``lineage/`` and ``_manifest_v2/`` are small driver-side files read and
-written with pyarrow, so ``out_dir`` is a local directory (the same
-assumption ``atomic_dir`` makes). A missing directory reads as empty; an
+written with pyarrow, so ``out_dir`` must be on the local filesystem (or a
+mount every executor shares): it is resolved once per call through
+Hadoop, and any other scheme — a scheme-less path under an HDFS
+``fs.defaultFS`` included — raises ``ValueError`` instead of splitting the
+output across two filesystems. A missing directory reads as empty; an
 unreadable file raises rather than silently redoing or unguarding a run.
 
 Reference parity note: the reference has no incremental machinery at all
@@ -45,14 +50,20 @@ import zlib
 from dataclasses import dataclass
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.accumulators import AccumulatorParam
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
 
 from docling_ibm_models_spark import schemas
-from docling_ibm_models_spark.pipeline.extract import doc_text_clean, extract_doc_text
+from docling_ibm_models_spark.pipeline.extract import (
+    _EXTRACT_SCHEMA,
+    _extract_batches_arrow,
+    doc_text_clean,
+)
 
 # nullable like Spark's own parquet writer, so lineage/manifest files
 # written by earlier Spark-side commits read as one table with these
@@ -115,13 +126,91 @@ def _read_side_table(path: str, schema: pa.Schema, snapshot_id: int) -> pa.Table
 
 def _write_side_file(table: pa.Table, path: str) -> None:
     """Write ``table`` as the one parquet file ``path``: under a
-    dot-prefixed name every reader skips, then renamed into place, so a
-    reader sees the whole file or none of it."""
+    dot-prefixed name every reader skips, synced to disk, then renamed into
+    place and the rename synced, so a reader — after a crash too — sees the
+    whole file or none of it."""
     directory, name = os.path.split(path)
     os.makedirs(directory, exist_ok=True)
     tmp = os.path.join(directory, f".{name}.tmp")
-    pq.write_table(table, tmp)
+    with open(tmp, "wb") as f:
+        pq.write_table(table, f)
+        f.flush()
+        os.fsync(f.fileno())
     os.replace(tmp, path)
+    fd = os.open(directory, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
+def _resolve_out_dir(spark: SparkSession, out_dir: str) -> tuple[str, str]:
+    """``out_dir`` as a qualified ``file:`` URI (for Spark) and the same
+    directory as a plain local path (for the driver-side files). Raises
+    ``ValueError`` if it names any other filesystem, checked before one is
+    touched."""
+    hadoop = spark._jvm.org.apache.hadoop.fs
+    conf = spark._jsc.hadoopConfiguration()
+    path = hadoop.Path(out_dir)
+    scheme = path.toUri().getScheme() or hadoop.FileSystem.getDefaultUri(conf).getScheme()
+    if scheme != "file":
+        raise ValueError(
+            f"out_dir {out_dir!r} resolves to a {scheme!r} filesystem: lineage and "
+            "manifest files are written by the driver, so out_dir must be a local "
+            "(or shared-mounted) directory, e.g. file:///data/out"
+        )
+    qualified = hadoop.FileSystem.getLocal(conf).makeQualified(path)
+    return qualified.toString(), qualified.toUri().getPath()
+
+
+class _GroupTally(AccumulatorParam):
+    """Accumulator of ``{partition_id: (doc_count, wall_s)}``: counts add,
+    walls keep the largest."""
+
+    def zero(self, value: dict) -> dict:
+        return {}
+
+    def addInPlace(self, acc: dict, other: dict) -> dict:
+        for gid, (n, wall) in other.items():
+            n0, wall0 = acc.get(gid, (0, 0.0))
+            acc[gid] = (n0 + n, max(wall0, wall))
+        return acc
+
+
+def _extract_and_tally(keys: list[str], owner: list[int], tally):
+    """The chunk's ``mapInArrow`` function over ``url, lang, html, source``
+    batches: ``partition_id`` = ``owner[i]`` for the row whose ``source``
+    is ``keys[i]`` (a source outside ``keys`` fails the task), then the
+    extraction kernel; each group's row count and latest cumulative
+    ``wall_s`` go to ``tally`` once the task's last batch is out."""
+
+    def run(batches):
+        key_set = pa.array(keys, pa.string())
+        owner_ids = pa.array(owner, pa.int32())
+
+        def tagged():
+            for rb in batches:
+                source = rb.column("source")
+                idx = pc.index_in(source, value_set=key_set)
+                if idx.null_count:
+                    stray = source.filter(idx.is_null())[0]
+                    raise ValueError(f"file outside its chunk: {stray}")
+                yield pa.RecordBatch.from_arrays(
+                    [rb.column("url"), rb.column("lang"), rb.column("html"), owner_ids.take(idx)],
+                    names=["url", "lang", "html", "partition_id"],
+                )
+
+        seen: dict[int, tuple[int, float]] = {}
+        for out in _extract_batches_arrow(tagged()):
+            # wall_s is one cumulative value per batch, rising batch by batch
+            wall = out.column("wall_s")[0].as_py()
+            counts = pc.value_counts(out.column("partition_id"))
+            for gid, n in zip(counts.field("values").to_pylist(), counts.field("counts").to_pylist()):
+                seen[gid] = (seen.get(gid, (0, 0.0))[0] + n, wall)
+            yield out
+        tally.add(seen)
+
+    return run
 
 
 def _check_snapshot_manifest(out_dir: str, snapshot_id: int, groups: list[list[str]]) -> None:
@@ -163,10 +252,10 @@ def _check_snapshot_manifest(out_dir: str, snapshot_id: int, groups: list[list[s
     )
 
 
-def committed_partitions(spark: SparkSession, out_dir: str, snapshot_id: int) -> set[int]:
-    """File groups of ``snapshot_id`` whose lineage row has committed (read
-    on the driver; ``spark`` is unused)."""
-    lin =_read_side_table(f"{out_dir}/lineage", _LINEAGE_ARROW, snapshot_id)
+def committed_partitions(out_dir: str, snapshot_id: int) -> set[int]:
+    """File groups of ``snapshot_id`` whose lineage row has committed, read
+    on the driver from the local output directory ``out_dir``."""
+    lin = _read_side_table(f"{out_dir}/lineage", _LINEAGE_ARROW, snapshot_id)
     return {
         r["partition_id"]
         for r in lin.select(["partition_id", "status"]).to_pylist()
@@ -192,7 +281,9 @@ def run_extraction(
     ``input_format='warc'`` runs the same lineage/resume machinery directly
     over raw crawl archives (sources/warc_source.py) — group = set of
     archives, scan = binaryFile + parse, everything downstream identical.
+    ``out_dir`` must be on the local filesystem (module docstring).
     """
+    out_uri, out_local = _resolve_out_dir(spark, out_dir)
     if input_format == "warc":
         from docling_ibm_models_spark.sources.warc_source import pages_from_warc
 
@@ -220,10 +311,10 @@ def run_extraction(
     else:
         raise ValueError(f"unknown input_format {input_format!r}")
     groups = list_file_groups(spark, pages_path, num_partitions, suffix=suffix)
-    _check_snapshot_manifest(out_dir, snapshot_id, groups)
+    _check_snapshot_manifest(out_local, snapshot_id, groups)
     num_groups = len(groups)
     chunk_partitions = chunk_partitions or num_groups
-    done = committed_partitions(spark, out_dir, snapshot_id)
+    done = committed_partitions(out_local, snapshot_id)
     todo = [g for g in range(num_groups) if g not in done]
     chunks = [
         todo[i : i + chunk_partitions] for i in range(0, len(todo), chunk_partitions)
@@ -233,42 +324,34 @@ def run_extraction(
 
     docs_processed = 0
     for chunk in chunks:
-        # one scan over every file of the chunk, each row tagged with its
-        # file's group; a file outside the map would be silent data loss
+        # one scan over every file of the chunk; the task function tags
+        # each row with its file's group and tallies the groups it wrote
         files = [f for gid in chunk for f in groups[gid]]
-        group_of = F.create_map(
-            *[F.lit(x) for gid in chunk for f in groups[gid] for x in (source_key(f), gid)]
+        owner = [gid for gid in chunk for _ in groups[gid]]
+        tally = spark.sparkContext.accumulator({}, _GroupTally())
+        pages = read_group(files).select("url", "lang", "html", source.alias("source"))
+        extracted = pages.mapInArrow(
+            _extract_and_tally([source_key(f) for f in files], owner, tally),
+            schema=_EXTRACT_SCHEMA,
         )
-        pid = F.coalesce(
-            group_of[source], F.raise_error(F.concat(F.lit("file outside its chunk: "), source))
-        )
-        extracted = extract_doc_text(read_group(files).withColumn("partition_id", pid))
-        obs = Observation()
-        counted = []
-        for gid in chunk:
-            hit = F.col("partition_id") == gid
-            counted += [
-                F.count_if(hit).alias(f"n{gid}"),
-                F.max(F.when(hit, F.col("wall_s"))).alias(f"w{gid}"),
-            ]
         (
-            doc_text_clean(extracted.observe(obs, *counted))
+            doc_text_clean(extracted)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("partition_id")
-            .parquet(f"{out_dir}/doc_text")
+            .parquet(f"{out_uri}/doc_text")
         )
-        seen = obs.get
+        seen = {gid: tally.value.get(gid, (0, 0.0)) for gid in chunk}
         lineage = {
             "snapshot_id": [snapshot_id] * len(chunk),
             "partition_id": chunk,
-            "doc_count": [seen[f"n{gid}"] for gid in chunk],
-            "wall_s": [seen[f"w{gid}"] or 0.0 for gid in chunk],
+            "doc_count": [seen[gid][0] for gid in chunk],
+            "wall_s": [seen[gid][1] for gid in chunk],
             "status": ["committed"] * len(chunk),
         }
         _write_side_file(
             pa.table(lineage, schema=_LINEAGE_ARROW),
-            f"{out_dir}/lineage/part-{snapshot_id}-{chunk[0]:05d}.parquet",
+            f"{out_local}/lineage/part-{snapshot_id}-{chunk[0]:05d}.parquet",
         )
         docs_processed += sum(lineage["doc_count"])
 
@@ -302,9 +385,10 @@ def read_incremental(
     partition this returns is durably complete; a producer still running
     simply yields its remaining partitions on later calls."""
     seen = set(seen_partitions or ())
-    committed = committed_partitions(spark, out_dir, snapshot_id)
+    out_uri, out_local = _resolve_out_dir(spark, out_dir)
+    committed = committed_partitions(out_local, snapshot_id)
     new = sorted(committed - seen)
-    df = spark.read.parquet(f"{out_dir}/doc_text")
+    df = spark.read.parquet(f"{out_uri}/doc_text")
     if new:
         out = df.where(F.col("partition_id").isin([int(p) for p in new]))
     else:

@@ -4,8 +4,12 @@ North-rule launch shape:
 
     spark-submit --py-files docling_ibm_models_spark.zip \\
         -m docling_ibm_models_spark.run \\
-        --pages /data/pages --out /data/out [--partitions 4096] \\
+        --pages /data/pages --out file:///shared/out [--partitions 4096] \\
         [--chunk-partitions 64] [--snapshot-desc crawl-2024-18]
+
+``--out`` must be on the local filesystem (on a cluster: a mount the
+driver and every executor share); any other scheme is refused, since the
+lineage and manifest files are written by the driver.
 
 or locally:
 
@@ -28,7 +32,7 @@ from docling_ibm_models_spark.session import get_spark
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description="Main-content extraction over a pages table")
     ap.add_argument("--pages", required=True, help="input pages parquet dir (input_hint shape)")
-    ap.add_argument("--out", required=True, help="local output dir (doc_text/ + lineage/)")
+    ap.add_argument("--out", required=True, help="local or file: output dir (doc_text/ + lineage/)")
     ap.add_argument(
         "--format",
         choices=["parquet", "warc"],

@@ -60,9 +60,10 @@ DOC_TEXT = StructType(
 # ---------------------------------------------------------------------------
 # Per-partition lineage rows (north rule: resumable with lineage + metrics).
 # One row per committed file group: doc_count is the group's extracted rows
-# (0 for a group of empty files); wall_s is the cumulative wall of the task
-# that held the group's last row. A task may hold more than one small file,
-# so groups sharing a task share that task's clock.
+# (0 for a group of empty files); wall_s is the largest cumulative task wall
+# among the group's rows, i.e. that of the task that held its last row. A
+# task may hold more than one small file, so groups sharing a task share
+# that task's clock.
 # ---------------------------------------------------------------------------
 LINEAGE = StructType(
     [

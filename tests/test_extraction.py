@@ -82,7 +82,7 @@ def test_lineage_and_resume(spark, tmp_path):
         spark, pages_path, out_dir, snap, num_partitions=8, chunk_partitions=2, max_chunks=2
     )
     assert r1.partitions_processed == 4
-    done = committed_partitions(spark, out_dir, snap)
+    done = committed_partitions(out_dir, snap)
     assert len(done) == 4
 
     # resume: processes exactly the remaining 4 partitions

@@ -1,6 +1,7 @@
 """The one-job commit protocol of ``run_extraction``: per-group lineage
-observed by the doc_text write, driver-side lineage/manifest files, and
-the resume rules that depend on them."""
+tallied by the doc_text write's own tasks, driver-side lineage/manifest
+files on a local output directory, and the resume rules that depend on
+them."""
 
 from __future__ import annotations
 
@@ -16,6 +17,7 @@ from docling_ibm_models_spark import schemas
 from docling_ibm_models_spark.pipeline.lineage import (
     committed_partitions,
     list_file_groups,
+    read_incremental,
     run_extraction,
     snapshot_id_for,
 )
@@ -109,7 +111,7 @@ def test_per_group_lineage_and_lost_lineage_resume(spark, tmp_path, input_format
                         input_format=input_format)
     assert (r2.partitions_done_before, r2.partitions_processed, r2.chunks) == (2, 2, 1)
     assert _doc_text(out_dir).equals(complete)
-    assert committed_partitions(spark, out_dir, snap) == {0, 1, 2, 3}
+    assert committed_partitions(out_dir, snap) == {0, 1, 2, 3}
 
 
 def test_resumes_from_spark_written_side_files(spark, tmp_path):
@@ -134,7 +136,7 @@ def test_resumes_from_spark_written_side_files(spark, tmp_path):
     r2 = run_extraction(spark, pages, out_dir, snap, num_partitions=4, chunk_partitions=2)
     assert (r2.partitions_done_before, r2.partitions_processed) == (2, 2)
     assert r1.docs_processed + r2.docs_processed == 500
-    assert committed_partitions(spark, out_dir, snap) == {0, 1, 2, 3}
+    assert committed_partitions(out_dir, snap) == {0, 1, 2, 3}
     with pytest.raises(ValueError, match="partitioning changed"):
         run_extraction(spark, pages, out_dir, snap, num_partitions=2)
 
@@ -187,3 +189,46 @@ def test_corrupt_side_file_raises(spark, tmp_path, side_dir):
         fh.truncate(os.path.getsize(victim) // 2)
     with pytest.raises(pa.ArrowInvalid):
         run_extraction(spark, pages, out_dir, snap, num_partitions=2)
+
+
+def test_file_uri_out_dir_resumes(spark, tmp_path):
+    """A ``file:`` URI out_dir lands doc_text, lineage and manifest in the
+    one local directory it names, so a resume through the same URI — or
+    through the plain path — sees every committed chunk."""
+    pages = str(tmp_path / "pages")
+    _pages_dir(spark, pages, 4)
+    local = tmp_path / "out dir"
+    uri = f"file://{local}"  # a Hadoop path string: not percent-encoded
+    snap = snapshot_id_for("file-uri")
+    r1 = run_extraction(spark, pages, uri, snap, num_partitions=4, chunk_partitions=2, max_chunks=1)
+    assert r1.partitions_processed == 2
+    assert committed_partitions(str(local), snap) == {0, 1}
+    r2 = run_extraction(spark, pages, uri, snap, num_partitions=4, chunk_partitions=2)
+    assert (r2.partitions_done_before, r2.partitions_processed) == (2, 2)
+    assert r1.docs_processed + r2.docs_processed == 500
+    assert _doc_text(str(local)).num_rows == 500
+    r3 = run_extraction(spark, pages, str(local), snap, num_partitions=4)
+    assert (r3.partitions_done_before, r3.partitions_processed) == (4, 0)
+    df, seen = read_incremental(spark, uri, snap)
+    assert seen == {0, 1, 2, 3} and df.count() == 500
+
+
+@pytest.mark.parametrize("default_fs", [None, "hdfs://localhost:8020"])
+def test_non_local_out_dir_raises(spark, tmp_path, default_fs):
+    """An out_dir on any filesystem but the local one is refused before
+    anything is read or written: an explicit ``s3a://`` URI, or a plain
+    path when ``fs.defaultFS`` is HDFS."""
+    pages = str(tmp_path / "pages")
+    out_dir = "s3a://bucket/out" if default_fs is None else "/data/out"
+    conf = spark._jsc.hadoopConfiguration()
+    key = "fs.defaultFS"
+    before = conf.get(key)
+    if default_fs is not None:
+        conf.set(key, default_fs)
+    try:
+        with pytest.raises(ValueError, match="out_dir"):
+            run_extraction(spark, pages, out_dir, snapshot_id_for("remote"), num_partitions=2)
+        with pytest.raises(ValueError, match="out_dir"):
+            read_incremental(spark, out_dir, snapshot_id_for("remote"))
+    finally:
+        conf.set(key, before)

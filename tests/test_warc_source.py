@@ -201,7 +201,7 @@ def test_warc_lineage_and_resume(spark, tmp_path):
         chunk_partitions=1, max_chunks=2, input_format="warc",
     )
     assert r1.partitions_processed == 2
-    assert len(committed_partitions(spark, out_dir, snap)) == 2
+    assert len(committed_partitions(out_dir, snap)) == 2
 
     r2 = run_extraction(
         spark, warc_dir, out_dir, snap, num_partitions=4,

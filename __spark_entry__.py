@@ -21,14 +21,11 @@ def entry(spark: SparkSession) -> DataFrame:
     with a per-url byte-identity flag vs the ground-truth text column."""
     from pyspark.sql import functions as F
 
-    from docling_ibm_models_spark.pipeline.extract import (
-        doc_text_clean,
-        extract_doc_text,
-    )
+    from docling_ibm_models_spark.pipeline.extract import extract_doc_text
     from docling_ibm_models_spark.sources.pages_source import pages_from_documents
 
     pages = pages_from_documents(spark, "/root/testdata/sf0.001")
-    out = doc_text_clean(extract_doc_text(pages))
+    out = extract_doc_text(pages)
     return out.join(pages.select("url", F.col("text").alias("expected")), "url").select(
         "url",
         "lang",

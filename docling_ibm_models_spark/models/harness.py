@@ -44,11 +44,6 @@ def get_or_create(name: str, factory: Callable[[], Any]) -> Any:
     return model
 
 
-def clear_registry() -> None:
-    with _LOCK:
-        _REGISTRY.clear()
-
-
 def get_profiler(name: str = "default", window_size: int = 20):
     """Per-worker AggSectionProfiler singleton (reference AggProfiler is a
     process-global singleton, app_profiler.py:148; here it rides the same

@@ -251,36 +251,3 @@ def synthetic_sam_weights(
         "net2_w": rng.normal(0.0, k2, (512, 256, 3, 3)),
         "net3_w": rng.normal(0.0, 1.0 / math.sqrt(9 * 512), (1024, 512, 3, 3)),
     }
-
-
-# ---------------------------------------------------------------------------
-# Multimodal glue (reference-authored, sam_opt.py:86-119): vision features
-# projected and SPLICED into the language token embeddings at the
-# <im_start> position. The OPT transformer that consumes the spliced
-# sequence is HuggingFace library code (environment-blocked); the splice
-# itself is the Vary-toy/reference contract and is ported + parity-tested.
-# ---------------------------------------------------------------------------
-def project_image_features(feats_nchw: np.ndarray, proj_w: np.ndarray, proj_b: np.ndarray) -> np.ndarray:
-    """sam_opt.py:89-91: (B, C, H, W) → flatten(2) → (B, P, C) → Linear
-    mm_projector C→hidden."""
-    B, C = feats_nchw.shape[:2]
-    f = feats_nchw.reshape(B, C, -1).transpose(0, 2, 1)
-    return f @ proj_w.T + proj_b
-
-
-def splice_image_embeddings(
-    input_ids: np.ndarray, token_embeds: np.ndarray, image_feats: np.ndarray,
-    im_start_token: int,
-) -> np.ndarray:
-    """sam_opt.py:93-117: per sequence, find the <im_start> token and
-    REPLACE the ``num_patches`` placeholder embeddings that follow it with
-    the projected vision features (prefix incl. <im_start> + features +
-    suffix). Shapes: ids (B, T), embeds (B, T, D), feats (B, P, D)."""
-    out = []
-    for ids, emb, feats in zip(input_ids, token_embeds, image_feats):
-        pos = int(np.where(ids == im_start_token)[0][0])
-        n = feats.shape[0]
-        out.append(
-            np.concatenate([emb[: pos + 1], feats, emb[pos + 1 + n :]], axis=0)
-        )
-    return np.stack(out, axis=0)

@@ -89,49 +89,11 @@ def tag_encoder_forward(w: dict, enc_inputs_nhwc: np.ndarray, n_heads: int) -> n
     return encoder_forward(w["enc_layers"], x, n_heads)
 
 
-def _mha_cross(q: np.ndarray, kv: np.ndarray, W, b, out_w, out_b, n_heads: int) -> np.ndarray:
-    """Attention with distinct query/key-value streams, (Lq,N,E)×(S,N,E),
-    packed (3E,E) in_proj (the q rows use W[:E], k/v rows W[E:]), per-head
-    1/sqrt(d) scaling. The reference passes its all-False encoder mask as
-    ``key_padding_mask`` here (tablemodel04_rs.py:185-190) — a no-op, so no
-    mask path exists in this forward."""
-    Lq, N, E = q.shape
-    S = kv.shape[0]
-    d = E // n_heads
-    Q = _proj(q, W[:E], b[:E])
-    K = _proj(kv, W[E : 2 * E], b[E : 2 * E])
-    V = _proj(kv, W[2 * E :], b[2 * E :])
-    Qh = Q.reshape(Lq, N * n_heads, d).transpose(1, 0, 2)
-    Kh = K.reshape(S, N * n_heads, d).transpose(1, 0, 2)
-    Vh = V.reshape(S, N * n_heads, d).transpose(1, 0, 2)
-    scores = Qh @ Kh.transpose(0, 2, 1) / math.sqrt(d)
-    scores -= scores.max(axis=-1, keepdims=True)
-    e = np.exp(scores)
-    attn = e / e.sum(axis=-1, keepdims=True)
-    out = (attn @ Vh).transpose(1, 0, 2).reshape(Lq, N, E)
-    return _proj(out, out_w, out_b)
-
-
-def decoder_layer_step(lw: dict, q: np.ndarray, hist: np.ndarray, memory: np.ndarray, n_heads: int) -> np.ndarray:
-    """One TMTransformerDecoderLayer.forward (transformer_rs.py:76-124 —
-    REFERENCE-authored math, modified from torch to decode only the last
-    token): self-attention of the last token over ``hist``, cross-attention
-    over ``memory``, post-norm residual FFN. Eval-mode dropouts = identity.
-    q is (1,N,E) — the reference's ``tgt[-1:, :, :]``."""
-    sa = _mha_cross(q, hist, lw["in_proj_w"], lw["in_proj_b"], lw["out_w"], lw["out_b"], n_heads)
-    x = _layer_norm(q + sa, lw["ln1_w"], lw["ln1_b"])
-    ca = _mha_cross(x, memory, lw["c_in_proj_w"], lw["c_in_proj_b"], lw["c_out_w"], lw["c_out_b"], n_heads)
-    x = _layer_norm(x + ca, lw["ln2_w"], lw["ln2_b"])
-    ff = _proj(np.maximum(_proj(x, lw["ff1_w"], lw["ff1_b"]), 0.0), lw["ff2_w"], lw["ff2_b"])
-    return _layer_norm(x + ff, lw["ln3_w"], lw["ln3_b"])
-
-
 def _attn_1q(q2: np.ndarray, K2: np.ndarray, V2: np.ndarray, Wq, bq, out_w, out_b, n_heads: int) -> np.ndarray:
     """Single-query attention over PRE-PROJECTED keys/values: q2 (1,E),
-    K2/V2 (S,E). Float-identical to `_mha_cross` with Lq=1, N=1 — the
-    head reshape/transpose and softmax are the same ops on the same
-    numbers; only the K/V projections moved out (they are row-wise, so
-    projecting each history/memory row once is exact)."""
+    K2/V2 (S,E), packed-in_proj multi-head attention with per-head
+    1/sqrt(d) scaling. The K/V projections are done by the caller: they
+    are row-wise, so projecting each history/memory row once is exact."""
     E = q2.shape[-1]
     d = E // n_heads
     Q = q2 @ Wq.T + bq

@@ -4,8 +4,7 @@ Shape (SURVEY.md §3, "Spark lifecycle of our engine"):
 
     pages scan (file-group pruned) → one ``mapInArrow`` stage running the
     pure-Python extraction kernel per Arrow batch (no per-row Python at
-    the JVM boundary) → doc_text rows carrying their partition_id + the
-    task's cumulative wall clock, which the lineage commit tallies.
+    the JVM boundary) → doc_text rows carrying their partition_id.
 
 **Why the default path has NO shuffle.** Extraction is a narrow per-row map
 whose cost is proportional to html bytes, and parquet scan splits are
@@ -26,19 +25,11 @@ here the only process boundary is the JVM↔Python Arrow exchange.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
 
 from docling_ibm_models_spark import schemas
 from docling_ibm_models_spark.functions.html_extract import extract_main_content
-
-# doc_text + the task's cumulative wall clock (tallied by the lineage commit)
-_EXTRACT_SCHEMA = StructType(
-    list(schemas.DOC_TEXT.fields) + [StructField("wall_s", DoubleType(), False)]
-)
 
 
 def salt_partition(df: DataFrame, num_partitions: int, key: str = "url") -> DataFrame:
@@ -77,7 +68,7 @@ def _extract_batches_arrow(batches):
     natively from flat offset/value arrays (``ListArray.from_arrays`` over
     a ``StructArray``) instead of per-row Python dicts that Spark's pandas
     serializer would have to re-discover, and output batches are zero-copy
-    Arrow. The task's cumulative wall time rides along for lineage."""
+    Arrow, in the ``schemas.DOC_TEXT`` shape."""
     import pyarrow as pa
 
     span_type = pa.struct(
@@ -88,7 +79,6 @@ def _extract_batches_arrow(batches):
             pa.field("block_idx", pa.int32(), nullable=False),
         ]
     )
-    t0 = time.monotonic()
     for rb in batches:
         if rb.num_rows == 0:
             continue
@@ -123,8 +113,6 @@ def _extract_batches_arrow(batches):
             fields=list(span_type),
         )
         spans_col = pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), span_struct)
-        wall = time.monotonic() - t0
-        n = rb.num_rows
         yield pa.RecordBatch.from_arrays(
             [
                 cols["url"],
@@ -134,7 +122,6 @@ def _extract_batches_arrow(batches):
                 pa.array(nchars, pa.int64()),
                 spans_col,
                 cols["partition_id"],
-                pa.array([wall] * n, pa.float64()),
             ],
             names=[
                 "url",
@@ -144,13 +131,12 @@ def _extract_batches_arrow(batches):
                 "n_chars",
                 "spans",
                 "partition_id",
-                "wall_s",
             ],
         )
 
 
 def extract_doc_text(pages: DataFrame, partition_id: int | None = None) -> DataFrame:
-    """pages (input_hint shape) → doc_text rows (+wall_s helper column).
+    """pages (input_hint shape) → doc_text rows.
 
     A narrow map over the scan splits (no shuffle). If ``pages`` already
     carries a ``partition_id`` column (e.g. from :func:`salt_partition`) it
@@ -162,10 +148,5 @@ def extract_doc_text(pages: DataFrame, partition_id: int | None = None) -> DataF
     # explicit projection: only url/lang/html/partition_id cross the Arrow
     # boundary (ground-truth `text` + warc_ts stay JVM-side / pruned at scan)
     pruned = pages.select("url", "lang", "html", "partition_id")
-    return pruned.mapInArrow(_extract_batches_arrow, schema=_EXTRACT_SCHEMA)
-
-
-def doc_text_clean(extracted: DataFrame) -> DataFrame:
-    """User-facing doc_text (drops the lineage helper column)."""
-    return extracted.drop("wall_s")
+    return pruned.mapInArrow(_extract_batches_arrow, schema=schemas.DOC_TEXT)
 

@@ -46,6 +46,7 @@ adds.
 from __future__ import annotations
 
 import os
+import time
 import zlib
 from dataclasses import dataclass
 
@@ -59,11 +60,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
 
 from docling_ibm_models_spark import schemas
-from docling_ibm_models_spark.pipeline.extract import (
-    _EXTRACT_SCHEMA,
-    _extract_batches_arrow,
-    doc_text_clean,
-)
+from docling_ibm_models_spark.pipeline.extract import _extract_batches_arrow
 
 # nullable like Spark's own parquet writer, so lineage/manifest files
 # written by earlier Spark-side commits read as one table with these
@@ -201,9 +198,9 @@ def _extract_and_tally(keys: list[str], owner: list[int], tally):
                 )
 
         seen: dict[int, tuple[int, float]] = {}
+        t0 = time.monotonic()
         for out in _extract_batches_arrow(tagged()):
-            # wall_s is one cumulative value per batch, rising batch by batch
-            wall = out.column("wall_s")[0].as_py()
+            wall = time.monotonic() - t0
             counts = pc.value_counts(out.column("partition_id"))
             for gid, n in zip(counts.field("values").to_pylist(), counts.field("counts").to_pylist()):
                 seen[gid] = (seen.get(gid, (0, 0.0))[0] + n, wall)
@@ -332,11 +329,10 @@ def run_extraction(
         pages = read_group(files).select("url", "lang", "html", source.alias("source"))
         extracted = pages.mapInArrow(
             _extract_and_tally([source_key(f) for f in files], owner, tally),
-            schema=_EXTRACT_SCHEMA,
+            schema=schemas.DOC_TEXT,
         )
         (
-            doc_text_clean(extracted)
-            .write.mode("overwrite")
+            extracted.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("partition_id")
             .parquet(f"{out_uri}/doc_text")

@@ -3059,10 +3059,7 @@ def warc_extract_match(spark, sf_dir):
     shuffle join — the verification join itself; the production extraction
     path (pages_from_warc → extract_doc_text → sink) stays zero-shuffle.
     """
-    from docling_ibm_models_spark.pipeline.extract import (
-        doc_text_clean,
-        extract_doc_text,
-    )
+    from docling_ibm_models_spark.pipeline.extract import extract_doc_text
     from docling_ibm_models_spark.sources.pages_source import cached_pages
     from docling_ibm_models_spark.sources.warc_source import (
         cached_warc_dir,
@@ -3070,7 +3067,7 @@ def warc_extract_match(spark, sf_dir):
     )
 
     wdir = cached_warc_dir(spark, sf_dir)
-    extracted = doc_text_clean(extract_doc_text(pages_from_warc(spark, wdir)))
+    extracted = extract_doc_text(pages_from_warc(spark, wdir))
     truth = cached_pages(spark, sf_dir).select("url", "text")
     return (
         extracted.join(truth, "url")
@@ -3110,10 +3107,7 @@ def warc_cdx_fetch(spark, sf_dir):
     seek-read == scan-read identity is exactly what a CDX index promises;
     compressed bytes touched per fetch are asserted in
     tests/test_warc_source.py (point fetch ≪ archive size)."""
-    from docling_ibm_models_spark.pipeline.extract import (
-        doc_text_clean,
-        extract_doc_text,
-    )
+    from docling_ibm_models_spark.pipeline.extract import extract_doc_text
     from docling_ibm_models_spark.sources.pages_source import cached_pages
     from docling_ibm_models_spark.sources.warc_source import (
         cached_warc_dir,
@@ -3128,7 +3122,7 @@ def warc_cdx_fetch(spark, sf_dir):
         .where(_h32_spark(F.col("url")) % 7 == 0)
     )
     fetched = fetch_warc_bodies(cdx)
-    extracted = doc_text_clean(extract_doc_text(fetched))
+    extracted = extract_doc_text(fetched)
     truth = cached_pages(spark, sf_dir).select("url", "text")
     return (
         extracted.join(truth, "url")

@@ -26,7 +26,6 @@ def get_spark(
     app_name: str = "docling-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    arrow_max_records: int = DEFAULT_ARROW_BATCH,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for the extraction workload.
@@ -36,9 +35,7 @@ def get_spark(
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SPARK_SQL_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-    )
+    shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -47,7 +44,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_max_records))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(DEFAULT_ARROW_BATCH))
         .config("spark.python.worker.reuse", "true")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.session.timeZone", "UTC")

@@ -2,49 +2,55 @@
 
 The engine's input table ``(url, warc_ts, html, ...)`` (BASELINE.json
 input_hint) is, in production, materialized from Common-Crawl-style WARC
-archives. This module closes that loop with public-spec-only code
-(ISO 28500 WARC/1.0/1.1; RFC 1952 gzip):
+archives; its extraction output goes back out as WET archives (CC's
+extracted-text layout: ``WARC-Type: conversion`` records with a
+``text/plain`` block), the interchange sink CC tooling, dedup pipelines and
+tokenizer runs consume directly. Public-spec-only code (ISO 28500
+WARC/1.0/1.1; RFC 1952 gzip; CC's published WET layout).
 
-* :func:`write_warc` — deterministic WARC writer used by tests/benches to
-  synthesize archives from the synthetic pages rows (no external data).
-  Supports the three layouts seen in the wild: plain ``.warc``, one gzip
-  stream over the whole file, and Common Crawl's layout of one gzip
-  *member per record* (which is what makes CC archives seekable by CDX
-  offset).
-* :func:`iter_warc_records` — incremental parser: gzip members are
-  decompressed one at a time with ``zlib.decompressobj`` and records are
-  scanned from a rolling buffer, so peak memory is one record + one
-  member, never the whole decompressed archive (~1 GB compressed CC files
-  decompress 3-5x; holding that per task would blow a 4 GiB executor).
-* :func:`pages_from_warc` — ``spark.read.format("binaryFile")`` scan →
-  Arrow-batched parser (``mapInPandas``) → one row per HTTP *response*
-  record: ``(url, warc_ts, html, warc_file, warc_offset)``.
+One codec serves both kinds: :data:`WARC` (HTTP ``response`` records) and
+:data:`WET` (``conversion`` records) parameterize one writer
+(:func:`write_warc`/:func:`write_wet`, byte-deterministic, in the three
+wild layouts: plain, one gzip stream, and CC's one gzip *member per
+record* that makes archives seekable by CDX offset), one row reader, one
+Spark scan (``binaryFile`` → :func:`parse_archives`, a ``mapInArrow``
+stage), one per-partition ``mapInArrow`` archive writer and one fixture
+cache. :func:`iter_warc_records` decompresses gzip members one at a time
+and scans records from a rolling buffer, so peak memory is one record +
+one member, never the whole decompressed archive (~1 GB compressed CC
+files decompress 3-5x). :func:`fetch_warc_bodies` reads single records
+back by CDX offset.
 
 Scale notes (100 TB crawl ≈ 100k × 1 GB archives): WARC archives don't
 split — gzip members must be scanned sequentially — so ``binaryFile``'s
 one-task-per-file granularity is exactly right for a 1000-executor
 cluster: ~100 tasks per executor, zero shuffle, and per-partition lineage
 attaches naturally to the archive path. ``pathGlobFilter`` prunes at the
-listing, and the parse yields output frames in bounded chunks so Arrow
-batches stay small even for million-record archives.
+listing, and the parse yields output batches of at most ``_CHUNK_ROWS``
+rows, so Arrow batches stay small even for million-record archives.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 import gzip as _gzip
 import io as _io
+import itertools
+import os
+import re as _re
 import zlib as _zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
+from dataclasses import dataclass
 
-import pandas as pd
+import pyarrow as pa
 
 _CRLF = b"\r\n"
 _HDR_END = b"\r\n\r\n"
 _GZIP_MAGIC = b"\x1f\x8b"
 
-# rows per yielded pandas frame: bounds driver/executor Arrow batch memory
-# no matter how many records one archive holds
+# rows per output Arrow batch: bounds driver/executor batch memory no
+# matter how many records one archive holds
 _CHUNK_ROWS = 2048
 
 
@@ -84,57 +90,56 @@ def write_warc(
     (including the leading warcinfo record). Deterministic in its inputs —
     no wall-clock reads; the warcinfo date reuses the first record's ts.
     """
-    info_ts = (records[0][1] if records else _dt.datetime(2024, 1, 1, tzinfo=_dt.timezone.utc))
-    info_block = b"software: docling-ibm-models-spark warc writer\r\nformat: WARC File Format 1.0\r\n"
-    raw_records = [
-        _warc_record(
-            [
-                ("WARC-Type", "warcinfo"),
-                ("WARC-Date", _iso(info_ts)),
-                ("Content-Type", "application/warc-fields"),
-            ],
-            info_block,
-        )
+    return _write_archive(path, records, compression, WARC)
+
+
+def write_wet(
+    path: str,
+    records: list[tuple[str, _dt.datetime, str]],
+    compression: str = "record",
+) -> int:
+    """Write ``records`` = [(url, warc_ts, extracted_text), ...] as a WET
+    file (UTF-8 conversion records), otherwise exactly like :func:`write_warc`."""
+    return _write_archive(path, records, compression, WET)
+
+
+def _write_archive(path: str, records: list[tuple], compression: str, codec: ArchiveCodec) -> int:
+    """Frame a warcinfo record plus one ``codec`` record per ``(url,
+    warc_ts, payload)`` and serialize them under one of the three wild
+    layouts; returns the record count."""
+    info_ts = records[0][1] if records else _dt.datetime(2024, 1, 1, tzinfo=_dt.timezone.utc)
+    info_headers = [
+        ("WARC-Type", "warcinfo"),
+        ("WARC-Date", _iso(info_ts)),
+        ("Content-Type", "application/warc-fields"),
     ]
-    for url, ts, html in records:
-        raw_records.append(
-            _warc_record(
-                [
-                    ("WARC-Type", "response"),
-                    ("WARC-Target-URI", url),
-                    ("WARC-Date", _iso(ts)),
-                    ("Content-Type", "application/http; msgtype=response"),
-                ],
-                _http_response_block(html),
-            )
-        )
-    _write_raw_records(path, raw_records, compression)
+    raw_records = [_warc_record(info_headers, codec.info)]
+    for url, ts, payload in records:
+        headers = [
+            ("WARC-Type", codec.record_type),
+            ("WARC-Target-URI", url),
+            ("WARC-Date", _iso(ts)),
+            ("Content-Type", codec.content_type),
+        ]
+        raw_records.append(_warc_record(headers, codec.to_block(payload)))
+    if compression not in ("record", "file", "none"):
+        raise ValueError(f"unknown compression {compression!r}")
+    with open(path, "wb") as f:
+        if compression == "file":
+            f.write(_gzip_member(b"".join(raw_records)))
+        else:
+            for rec in raw_records:
+                f.write(_gzip_member(rec) if compression == "record" else rec)
     return len(raw_records)
 
 
-def _write_raw_records(
-    path: str, raw_records: list[bytes], compression: str
-) -> None:
-    """Serialize already-framed WARC records under one of the three wild
-    layouts (shared by the WARC response writer and the WET writer)."""
-    with open(path, "wb") as f:
-        if compression == "record":
-            for rec in raw_records:
-                buf = _io.BytesIO()
-                with _gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
-                    gz.write(rec)
-                f.write(buf.getvalue())
-        elif compression == "file":
-            buf = _io.BytesIO()
-            with _gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
-                for rec in raw_records:
-                    gz.write(rec)
-            f.write(buf.getvalue())
-        elif compression == "none":
-            for rec in raw_records:
-                f.write(rec)
-        else:
-            raise ValueError(f"unknown compression {compression!r}")
+def _gzip_member(data: bytes) -> bytes:
+    """``data`` as one gzip member, mtime pinned to 0 so output is
+    byte-deterministic (``gzip.compress`` would stamp the host OS byte)."""
+    buf = _io.BytesIO()
+    with _gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
+        gz.write(data)
+    return buf.getvalue()
 
 
 def _iso(ts: _dt.datetime) -> str:
@@ -304,8 +309,6 @@ def _http_body(block: bytes) -> bytes:
     return block[i + 2 :] if i >= 0 else block
 
 
-import re as _re
-
 _LANG_ATTR = _re.compile(rb'<html[^>]*\blang=["\']?([A-Za-z][A-Za-z-]{0,10})', _re.I)
 
 
@@ -334,18 +337,124 @@ def _parse_warc_date(ts_raw: str | None) -> _dt.datetime | None:
     return None
 
 
+# ---------------------------------------------------------------------------
+# the two archive kinds
+# ---------------------------------------------------------------------------
+
+PAGES_FROM_WARC_SCHEMA = (
+    "url string, warc_ts timestamp, html binary, lang string, "
+    "warc_file string, warc_offset long"
+)
+
+TEXT_FROM_WET_SCHEMA = (
+    "url string, warc_ts timestamp, extracted_text string, "
+    "warc_file string, warc_offset long"
+)
+
+
+def _record_row(headers: dict[str, str], block: bytes, codec: ArchiveCodec) -> tuple:
+    """``(url, warc_ts, *payload columns)`` of one ``codec`` record."""
+    url = headers.get("warc-target-uri", "")
+    return (url, _parse_warc_date(headers.get("warc-date")), *codec.to_row(block))
+
+
+def _response_payload(block: bytes) -> tuple[bytes, str | None]:
+    """``(html, lang)`` of an HTTP response block."""
+    body = _http_body(block)
+    return body, _sniff_lang(body, block[: len(block) - len(body)])
+
+
+def _conversion_payload(block: bytes) -> tuple[str]:
+    return (block.decode("utf-8", errors="replace"),)
+
+
+@dataclass(frozen=True)
+class ArchiveCodec:
+    """One archive kind: the payload record it writes and reads back."""
+
+    name: str  # cache-key prefix
+    record_type: str  # WARC-Type of the payload records
+    content_type: str  # their Content-Type header
+    info: bytes  # the warcinfo block
+    ext: str  # file extension of an uncompressed archive (".gz" appended otherwise)
+    payload: str  # the column the distributed writer frames
+    schema: str  # the Spark scan's output schema
+    to_block: Callable[[object], bytes]  # payload → record block
+    to_row: Callable[[bytes], tuple]  # record block → payload columns
+
+
+WARC = ArchiveCodec(
+    name="warc",
+    record_type="response",
+    content_type="application/http; msgtype=response",
+    info=b"software: docling-ibm-models-spark warc writer\r\nformat: WARC File Format 1.0\r\n",
+    ext=".warc",
+    payload="html",
+    schema=PAGES_FROM_WARC_SCHEMA,
+    to_block=_http_response_block,
+    to_row=_response_payload,
+)
+
+WET = ArchiveCodec(
+    name="wet",
+    record_type="conversion",
+    content_type="text/plain",
+    info=(
+        b"software: docling-ibm-models-spark wet writer\r\n"
+        b"format: WARC File Format 1.0\r\n"
+        b"publisher: extraction pipeline (conversion records)\r\n"
+    ),
+    ext=".warc.wet",
+    payload="extracted_text",
+    schema=TEXT_FROM_WET_SCHEMA,
+    to_block=str.encode,  # UTF-8
+    to_row=_conversion_payload,
+)
+
+
+def _records_to_rows(name: str, raw: bytes, codec: ArchiveCodec) -> Iterator[tuple]:
+    for headers, block, offset in iter_warc_records(raw):
+        if headers.get("warc-type") == codec.record_type:
+            yield (*_record_row(headers, block, codec), name, offset)
+
+
 def warc_records_to_rows(
     name: str, raw: bytes
 ) -> Iterator[tuple[str, _dt.datetime | None, bytes, str | None, str, int]]:
     """All HTTP-response records of one archive as pages-shaped tuples
     ``(url, warc_ts, html, lang, warc_file, warc_offset)``."""
-    for headers, block, offset in iter_warc_records(raw):
-        if headers.get("warc-type") != "response":
-            continue
-        url = headers.get("warc-target-uri", "")
-        ts = _parse_warc_date(headers.get("warc-date"))
-        body = _http_body(block)
-        yield url, ts, body, _sniff_lang(body, block[: len(block) - len(body)]), name, offset
+    return _records_to_rows(name, raw, WARC)
+
+
+def wet_records_to_rows(
+    name: str, raw: bytes
+) -> Iterator[tuple[str, _dt.datetime | None, str, str, int]]:
+    """All conversion records of one WET archive as extraction-output-shaped
+    tuples ``(url, warc_ts, extracted_text, warc_file, warc_offset)``."""
+    return _records_to_rows(name, raw, WET)
+
+
+_ARROW_TYPES = {
+    "string": pa.string(),
+    "binary": pa.binary(),
+    "long": pa.int64(),
+    # Spark TimestampType: microseconds since the epoch, UTC
+    "timestamp": pa.timestamp("us", tz="UTC"),
+}
+
+
+def _arrow_schema(ddl: str) -> pa.Schema:
+    """The Arrow schema of a flat ``"name type, ..."`` Spark schema string."""
+    return pa.schema([(n, _ARROW_TYPES[t]) for n, t in (f.split() for f in ddl.split(", "))])
+
+
+def _to_batches(rows: Iterable[tuple], ddl: str) -> Iterator[pa.RecordBatch]:
+    """Row tuples → Arrow batches of at most ``_CHUNK_ROWS`` rows."""
+    schema = _arrow_schema(ddl)
+    it = iter(rows)
+    while chunk := list(itertools.islice(it, _CHUNK_ROWS)):
+        cols = [pa.array(col, f.type) for col, f in zip(zip(*chunk), schema)]
+        yield pa.RecordBatch.from_arrays(cols, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -427,13 +536,16 @@ def _read_record_from(f, offset: int, chunk: int = _FETCH_CHUNK):
             bytes_read += len(data)
 
 
+def _local_path(path: str) -> str:
+    return path[5:] if path.startswith("file:") else path
+
+
 def read_warc_record_at(path: str, offset: int) -> tuple[dict[str, str], bytes, int]:
     """Fetch one record by ``(archive path, CDX offset)`` without scanning
     the archive — seek + single-member decompress. Returns ``(headers,
     block, compressed_bytes_read)``; ``compressed_bytes_read`` is the
     evidence that only ~one record's worth of the file was touched."""
-    local = path[5:] if path.startswith("file:") else path
-    with open(local, "rb") as f:
+    with open(_local_path(path), "rb") as f:
         return _read_record_from(f, offset)
 
 
@@ -447,61 +559,68 @@ FETCHED_FROM_CDX_SCHEMA = (
 def fetch_warc_bodies(cdx_df):
     """CDX index rows ``(warc_file, warc_offset, ...)`` → full records via
     seek-read. The distributed shape for 'pull N documents out of a 100 TB
-    crawl by index': repartition by archive so each task opens each file
-    ONCE, sort within partitions by offset so seeks are forward-only
-    (object-store range reads coalesce), then one Arrow-batched fetch per
-    row — compressed bytes touched ≈ sum of the fetched records' member
-    sizes, not the archive sizes. url/warc_ts/lang are re-derived from the
-    FETCHED record (not trusted from the index), so downstream joins
-    verify the index points where it claims."""
-
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["url", "warc_ts", "html", "lang", "warc_file", "warc_offset",
-                "fetch_bytes"]
-        handles: dict[str, object] = {}
-        try:
-            rows: list[tuple] = []
-            for pdf in batches:
-                for path, off in zip(pdf["warc_file"], pdf["warc_offset"]):
-                    local = path[5:] if path.startswith("file:") else path
-                    f = handles.get(local)
-                    if f is None:
-                        f = handles[local] = open(local, "rb")
-                    headers, block, nread = _read_record_from(f, int(off))
-                    body = _http_body(block)
-                    rows.append((
-                        headers.get("warc-target-uri", ""),
-                        _parse_warc_date(headers.get("warc-date")),
-                        body,
-                        _sniff_lang(body, block[: len(block) - len(body)]),
-                        path,
-                        int(off),
-                        nread,
-                    ))
-                    if len(rows) >= _CHUNK_ROWS:
-                        yield pd.DataFrame(rows, columns=cols)
-                        rows = []
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-        finally:
-            for f in handles.values():
-                f.close()
-
+    crawl by index': repartition by archive, sort within partitions by
+    ``(warc_file, warc_offset)`` so each task reads each archive in one
+    forward-only pass (object-store range reads coalesce) with one file
+    open at a time, then one Arrow-batched fetch per row — compressed
+    bytes touched ≈ sum of the fetched records' member sizes, not the
+    archive sizes. url/warc_ts/lang are re-derived from the FETCHED record
+    (not trusted from the index), so downstream joins verify the index
+    points where it claims."""
     return (
         cdx_df.repartition("warc_file")
         .sortWithinPartitions("warc_file", "warc_offset")
-        .mapInPandas(fetch, FETCHED_FROM_CDX_SCHEMA)
+        .mapInArrow(_fetch_records, FETCHED_FROM_CDX_SCHEMA)
     )
+
+
+def _fetch_records(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """The fetch task over archive-sorted ``(warc_file, warc_offset)``
+    batches: an archive is closed as soon as the rows move on to the next,
+    so a task holds one file open however many archives it reads."""
+
+    def rows():
+        current, f = None, None
+        try:
+            for rb in batches:
+                files = rb.column("warc_file").to_pylist()
+                offsets = rb.column("warc_offset").to_pylist()
+                for path, off in zip(files, offsets):
+                    if path != current:
+                        if f is not None:
+                            f.close()
+                        current, f = path, open(_local_path(path), "rb")
+                    headers, block, nread = _read_record_from(f, off)
+                    yield (*_record_row(headers, block, WARC), path, off, nread)
+        finally:
+            if f is not None:
+                f.close()
+
+    return _to_batches(rows(), FETCHED_FROM_CDX_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
 # Spark source
 # ---------------------------------------------------------------------------
 
-PAGES_FROM_WARC_SCHEMA = (
-    "url string, warc_ts timestamp, html binary, lang string, "
-    "warc_file string, warc_offset long"
-)
+
+def parse_archives(archives, codec: ArchiveCodec):
+    """``(path, content, ...)`` rows of a ``binaryFile`` scan, batch or
+    streaming → one ``codec.schema`` row per ``codec`` record: one
+    ``mapInArrow`` stage decoding one archive at a time."""
+    return archives.select("path", "content").mapInArrow(
+        functools.partial(_parse_batches, codec), codec.schema
+    )
+
+
+def _parse_batches(codec: ArchiveCodec, batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def rows():
+        for rb in batches:
+            paths, contents = rb.column("path"), rb.column("content")
+            for i in range(rb.num_rows):
+                yield from _records_to_rows(paths[i].as_py(), contents[i].as_py(), codec)
+
+    return _to_batches(rows(), codec.schema)
 
 
 def pages_from_warc(spark, path_glob: str | list[str]):
@@ -513,26 +632,13 @@ def pages_from_warc(spark, path_glob: str | list[str]):
     ``warc_file``/``warc_offset`` carry the CDX-style provenance the
     lineage sink records per partition.
     """
-
-    src = spark.read.format("binaryFile").load(path_glob)
-    return src.select("path", "content").mapInPandas(
-        _parse_archive_batches, PAGES_FROM_WARC_SCHEMA
-    )
+    return parse_archives(spark.read.format("binaryFile").load(path_glob), WARC)
 
 
-def _parse_archive_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """(path, content) batches → pages-shaped frames in bounded chunks."""
-    cols = ["url", "warc_ts", "html", "lang", "warc_file", "warc_offset"]
-    for pdf in batches:
-        rows: list[tuple] = []
-        for name, raw in zip(pdf["path"], pdf["content"]):
-            for row in warc_records_to_rows(name, bytes(raw)):
-                rows.append(row)
-                if len(rows) >= _CHUNK_ROWS:
-                    yield pd.DataFrame(rows, columns=cols)
-                    rows = []
-        if rows:
-            yield pd.DataFrame(rows, columns=cols)
+def text_from_wet(spark, path_glob: str | list[str]):
+    """Scan WET archives back into the extraction-output shape, exactly
+    like :func:`pages_from_warc`."""
+    return parse_archives(spark.read.format("binaryFile").load(path_glob), WET)
 
 
 def write_warc_archives(
@@ -545,37 +651,46 @@ def write_warc_archives(
     exercise every listed layout (pass ``("record", "none")`` for a
     seekable-only corpus — the whole-file-gzip layout cannot serve CDX
     point fetches). Returns the number of archives written."""
-    import os
+    return _write_archives(pages_df, out_dir, layouts, WARC)
 
-    from pyspark import TaskContext
 
+def write_wet_archives(
+    text_df, out_dir: str, layouts: tuple[str, ...] = ("record", "file", "none")
+) -> int:
+    """Write an extraction-output DataFrame ``(url, warc_ts,
+    extracted_text)`` as WET archives, exactly like :func:`write_warc_archives`
+    — the distributed sink a 10^12-doc extraction run ends in."""
+    return _write_archives(text_df, out_dir, layouts, WET)
+
+
+def _write_archives(df, out_dir: str, layouts: tuple[str, ...], codec: ArchiveCodec) -> int:
     os.makedirs(out_dir, exist_ok=True)
-
-    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pid = TaskContext.get().partitionId()
-        recs: list[tuple[str, _dt.datetime, bytes]] = []
-        for pdf in batches:
-            for url, ts, html in zip(pdf["url"], pdf["warc_ts"], pdf["html"]):
-                t = ts.to_pydatetime() if hasattr(ts, "to_pydatetime") else ts
-                if t.tzinfo is None:
-                    t = t.replace(tzinfo=_dt.timezone.utc)
-                recs.append((url, t, bytes(html)))
-        if recs:
-            comp = layouts[pid % len(layouts)]
-            # extension tells the truth: gzip/zcat, CDX indexers, and
-            # pathGlobFilter patterns all key on it
-            ext = ".warc" if comp == "none" else ".warc.gz"
-            write_warc(os.path.join(out_dir, f"crawl-{pid:05d}{ext}"), recs, comp)
-        yield pd.DataFrame({"archives": [1 if recs else 0]})
-
     n = (
-        pages_df.select("url", "warc_ts", "html")
-        .mapInPandas(write_part, "archives int")
+        df.select("url", "warc_ts", codec.payload)
+        .mapInArrow(functools.partial(_write_partition, out_dir, layouts, codec), "archives int")
         .groupBy()
         .sum("archives")
         .collect()[0][0]
     )
     return int(n or 0)
+
+
+def _write_partition(
+    out_dir: str, layouts: tuple[str, ...], codec: ArchiveCodec, batches: Iterator[pa.RecordBatch]
+) -> Iterator[pa.RecordBatch]:
+    """One task's ``(url, warc_ts, payload)`` rows → one archive, its
+    layout picked by partition id; yields 1 if it wrote one, else 0."""
+    from pyspark import TaskContext
+
+    pid = TaskContext.get().partitionId()
+    recs = [rec for rb in batches for rec in zip(*(col.to_pylist() for col in rb.columns))]
+    if recs:
+        comp = layouts[pid % len(layouts)]
+        # extension tells the truth: gzip/zcat, CDX indexers, and
+        # pathGlobFilter patterns all key on it
+        ext = codec.ext if comp == "none" else codec.ext + ".gz"
+        _write_archive(os.path.join(out_dir, f"crawl-{pid:05d}{ext}"), recs, comp, codec)
+    yield pa.RecordBatch.from_arrays([pa.array([int(bool(recs))], pa.int32())], names=["archives"])
 
 
 def cached_warc_dir(
@@ -587,8 +702,32 @@ def cached_warc_dir(
     """Materialize the synthetic pages rows as WARC archives under /tmp,
     cached by (sf_dir, files, layouts, generator+this module's hash) — the
     local stand-in for 'the crawl archives already sit in object storage'."""
+    return _cached_archive_dir(spark, sf_dir, WARC, files, layouts, spark.read.parquet)
+
+
+def cached_wet_dir(spark, sf_dir: str, files: int = 8) -> str:
+    """Like :func:`cached_warc_dir`, the WET corpus the extraction pipeline
+    produces over the synthetic pages (the real kernel's output, warc_ts
+    re-attached from the pages table)."""
+    from docling_ibm_models_spark.pipeline.extract import extract_doc_text
+
+    def extracted_with_ts(pages_path: str):
+        extracted = extract_doc_text(spark.read.parquet(pages_path)).select("url", "extracted_text")
+        # re-attach warc_ts for the conversion records' WARC-Date — one
+        # url-keyed shuffle join in the fixture producer only; the
+        # production sink receives warc_ts alongside the extraction output
+        return extracted.join(spark.read.parquet(pages_path).select("url", "warc_ts"), "url")
+
+    return _cached_archive_dir(
+        spark, sf_dir, WET, files, ("record", "file", "none"), extracted_with_ts
+    )
+
+
+def _cached_archive_dir(spark, sf_dir: str, codec: ArchiveCodec, files: int, layouts, rows) -> str:
+    """``rows(pages_path)`` written as ``files`` ``codec`` archives (url-hash
+    partitioned) under /tmp, once per (kind, pages cache key, files,
+    layouts, this module's hash); ``_SUCCESS`` marks a finished build."""
     import hashlib
-    import os
     import tempfile
 
     from docling_ibm_models_spark.sources.pages_source import cached_pages_path
@@ -597,201 +736,16 @@ def cached_warc_dir(
     with open(os.path.abspath(__file__), "rb") as f:
         mod_hash = hashlib.sha256(f.read()).hexdigest()[:12]
     # fold the pages cache key in: a pages-generator change must invalidate
-    # the derived archives too
+    # the derived archives too. The kind goes first: pages_key starts with
+    # '_' (path-mangled), and a leading underscore makes Spark's file index
+    # treat the dir as a metadata path ("All paths were ignored")
     pages_key = os.path.basename(os.path.dirname(pages_path))
     lay = "".join(s[0] for s in layouts)  # rfn / rn ...
-    key = f"{pages_key}-f{files}-{lay}-{mod_hash}"
-    out_dir = os.path.join(tempfile.gettempdir(), "bench_warc_cache", key)
+    key = f"{codec.name}-{pages_key}-f{files}-{lay}-{mod_hash}"
+    out_dir = os.path.join(tempfile.gettempdir(), "bench_archive_cache", key)
     done = os.path.join(out_dir, "_SUCCESS")
     if not os.path.exists(done):
-        pages = spark.read.parquet(pages_path).repartition(files, "url")
-        write_warc_archives(pages, out_dir, layouts=layouts)
-        with open(done, "w") as f:
-            f.write("ok")
-    return out_dir
-
-
-# ---------------------------------------------------------------------------
-# WET (extracted-text "conversion" records) — the OUTPUT side of the on-ramp
-# ---------------------------------------------------------------------------
-#
-# Common Crawl publishes its extracted plain text as WET files: WARC
-# containers whose records are ``WARC-Type: conversion`` with a
-# ``text/plain`` block holding the extracted text (no HTTP envelope).
-# The engine's extraction output is exactly that shape, so the natural
-# interchange sink for a 10^12-doc run is a WET corpus the rest of the
-# ecosystem (CC tooling, dedup pipelines, tokenizer runs) can consume
-# directly. Public spec only (ISO 28500 + CC's published WET layout).
-
-
-def write_wet(
-    path: str,
-    records: list[tuple[str, _dt.datetime, str]],
-    compression: str = "record",
-) -> int:
-    """Write ``records`` = [(url, warc_ts, extracted_text), ...] as a WET
-    file (WARC conversion records, text/plain blocks, UTF-8). Layouts and
-    determinism guarantees match :func:`write_warc`; returns the record
-    count including the leading warcinfo."""
-    info_ts = (
-        records[0][1]
-        if records
-        else _dt.datetime(2024, 1, 1, tzinfo=_dt.timezone.utc)
-    )
-    info_block = (
-        b"software: docling-ibm-models-spark wet writer\r\n"
-        b"format: WARC File Format 1.0\r\n"
-        b"publisher: extraction pipeline (conversion records)\r\n"
-    )
-    raw_records = [
-        _warc_record(
-            [
-                ("WARC-Type", "warcinfo"),
-                ("WARC-Date", _iso(info_ts)),
-                ("Content-Type", "application/warc-fields"),
-            ],
-            info_block,
-        )
-    ]
-    for url, ts, text in records:
-        raw_records.append(
-            _warc_record(
-                [
-                    ("WARC-Type", "conversion"),
-                    ("WARC-Target-URI", url),
-                    ("WARC-Date", _iso(ts)),
-                    ("Content-Type", "text/plain"),
-                ],
-                text.encode("utf-8"),
-            )
-        )
-    _write_raw_records(path, raw_records, compression)
-    return len(raw_records)
-
-
-def wet_records_to_rows(
-    name: str, raw: bytes
-) -> Iterator[tuple[str, _dt.datetime | None, str, str, int]]:
-    """All conversion records of one WET archive as extraction-output-shaped
-    tuples ``(url, warc_ts, extracted_text, warc_file, warc_offset)``. Runs
-    on the same incremental parser as the response reader — bounded memory,
-    hostile Content-Length tolerated, offsets CDX-compatible."""
-    for headers, block, offset in iter_warc_records(raw):
-        if headers.get("warc-type") != "conversion":
-            continue
-        url = headers.get("warc-target-uri", "")
-        ts = _parse_warc_date(headers.get("warc-date"))
-        yield url, ts, block.decode("utf-8", errors="replace"), name, offset
-
-
-TEXT_FROM_WET_SCHEMA = (
-    "url string, warc_ts timestamp, extracted_text string, "
-    "warc_file string, warc_offset long"
-)
-
-
-def text_from_wet(spark, path_glob: str | list[str]):
-    """Scan WET archives back into the extraction-output shape. Same scale
-    contract as :func:`pages_from_warc`: one ``binaryFile`` task per
-    archive, Arrow-batched incremental parse, zero shuffle, CDX-style
-    provenance columns."""
-    src = spark.read.format("binaryFile").load(path_glob)
-    return src.select("path", "content").mapInPandas(
-        _parse_wet_batches, TEXT_FROM_WET_SCHEMA
-    )
-
-
-def _parse_wet_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = ["url", "warc_ts", "extracted_text", "warc_file", "warc_offset"]
-    for pdf in batches:
-        rows: list[tuple] = []
-        for name, raw in zip(pdf["path"], pdf["content"]):
-            for row in wet_records_to_rows(name, bytes(raw)):
-                rows.append(row)
-                if len(rows) >= _CHUNK_ROWS:
-                    yield pd.DataFrame(rows, columns=cols)
-                    rows = []
-        if rows:
-            yield pd.DataFrame(rows, columns=cols)
-
-
-def write_wet_archives(
-    text_df, out_dir: str, layouts: tuple[str, ...] = ("record", "file", "none")
-) -> int:
-    """Write an extraction-output DataFrame ``(url, warc_ts,
-    extracted_text)`` as WET archives, one per partition — the distributed
-    sink a 10^12-doc extraction run ends in. Layouts cycle by partition id
-    exactly like :func:`write_warc_archives`; returns archives written."""
-    import os
-
-    from pyspark import TaskContext
-
-    os.makedirs(out_dir, exist_ok=True)
-
-    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pid = TaskContext.get().partitionId()
-        recs: list[tuple[str, _dt.datetime, str]] = []
-        for pdf in batches:
-            for url, ts, text in zip(
-                pdf["url"], pdf["warc_ts"], pdf["extracted_text"]
-            ):
-                t = ts.to_pydatetime() if hasattr(ts, "to_pydatetime") else ts
-                if t.tzinfo is None:
-                    t = t.replace(tzinfo=_dt.timezone.utc)
-                recs.append((url, t, str(text)))
-        if recs:
-            comp = layouts[pid % len(layouts)]
-            ext = ".warc.wet" if comp == "none" else ".warc.wet.gz"
-            write_wet(os.path.join(out_dir, f"crawl-{pid:05d}{ext}"), recs, comp)
-        yield pd.DataFrame({"archives": [1 if recs else 0]})
-
-    n = (
-        text_df.select("url", "warc_ts", "extracted_text")
-        .mapInPandas(write_part, "archives int")
-        .groupBy()
-        .sum("archives")
-        .collect()[0][0]
-    )
-    return int(n or 0)
-
-
-def cached_wet_dir(spark, sf_dir: str, files: int = 8) -> str:
-    """Materialize the WET corpus the extraction pipeline produces over the
-    synthetic pages: pages → extraction (the real kernel) → per-record
-    warc_ts re-attached from the pages table → WET archives under /tmp,
-    cached by (pages cache key, files, this module's hash)."""
-    import hashlib
-    import os
-    import tempfile
-
-    from docling_ibm_models_spark.pipeline.extract import (
-        doc_text_clean,
-        extract_doc_text,
-    )
-    from docling_ibm_models_spark.sources.pages_source import cached_pages_path
-
-    pages_path = cached_pages_path(spark, sf_dir)
-    with open(os.path.abspath(__file__), "rb") as f:
-        mod_hash = hashlib.sha256(f.read()).hexdigest()[:12]
-    pages_key = os.path.basename(os.path.dirname(pages_path))
-    # prefix, not suffix: pages_key starts with '_' (path-mangled), and a
-    # leading underscore makes Spark's file index treat the dir as a
-    # metadata path ("All paths were ignored" driver-log warning)
-    key = f"wet-{pages_key}-f{files}-{mod_hash}"
-    out_dir = os.path.join(tempfile.gettempdir(), "bench_wet_cache", key)
-    done = os.path.join(out_dir, "_SUCCESS")
-    if not os.path.exists(done):
-        pages = spark.read.parquet(pages_path)
-        extracted = doc_text_clean(extract_doc_text(pages)).select(
-            "url", "extracted_text"
-        )
-        # re-attach warc_ts for the conversion records' WARC-Date — one
-        # url-keyed shuffle join in the fixture producer only; the
-        # production sink receives warc_ts alongside the extraction output
-        with_ts = extracted.join(
-            spark.read.parquet(pages_path).select("url", "warc_ts"), "url"
-        ).repartition(files, "url")
-        write_wet_archives(with_ts, out_dir)
+        _write_archives(rows(pages_path).repartition(files, "url"), out_dir, layouts, codec)
         with open(done, "w") as f:
             f.write("ok")
     return out_dir

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from docling_ibm_models_spark import schemas
-from docling_ibm_models_spark.pipeline.extract import doc_text_clean, extract_doc_text
+from docling_ibm_models_spark.pipeline.extract import extract_doc_text
 
 
 def stream_extract(
@@ -57,10 +57,7 @@ def stream_extract_warc(
     AvailableNow + checkpoint = incremental batch over newly landed
     archives, the streaming twin of run_extraction(input_format='warc')'s
     lineage anti-join."""
-    from docling_ibm_models_spark.sources.warc_source import (
-        PAGES_FROM_WARC_SCHEMA,
-        _parse_archive_batches,
-    )
+    from docling_ibm_models_spark.sources.warc_source import WARC, parse_archives
 
     # binaryFile's schema is fixed by the source, but streaming file
     # sources require it stated explicitly
@@ -69,9 +66,7 @@ def stream_extract_warc(
         .schema("path string, modificationTime timestamp, length long, content binary")
         .load(warc_dir)
     )
-    pages = archives.select("path", "content").mapInPandas(
-        _parse_archive_batches, PAGES_FROM_WARC_SCHEMA
-    )
+    pages = parse_archives(archives, WARC)
     return _run_extract_stream(pages, out_dir, checkpoint_dir, await_termination)
 
 
@@ -82,7 +77,7 @@ def _run_extract_stream(
     ``extract_doc_text`` (one ``mapInArrow`` stage) -> parquet sink with
     checkpoint, AvailableNow drain. One definition so the parquet and WARC
     on-ramps can never diverge in sink semantics."""
-    extracted = doc_text_clean(extract_doc_text(pages))
+    extracted = extract_doc_text(pages)
     q = (
         extracted.writeStream.format("parquet")
         .option("path", out_dir)
@@ -144,7 +139,7 @@ def stream_layout(
     """Model inference under Structured Streaming: a pages file-source
     stream driven through the SAME layout-detection stage the batch
     pipeline serves (page_records → Arrow-batched model UDF behind the
-    executor singleton + broadcast weights). mapInPandas is a stateless
+    executor singleton + broadcast weights). That batch map is a stateless
     narrow transform, so it composes with streaming unchanged — this is
     the production shape for continuous crawl ingestion: models stay
     resident in the long-lived python workers while AvailableNow (or a

@@ -11,7 +11,7 @@ from docling_ibm_models_spark.functions.html_extract import (
     extract_main_content,
     normalize_text,
 )
-from docling_ibm_models_spark.pipeline.extract import doc_text_clean, extract_doc_text
+from docling_ibm_models_spark.pipeline.extract import extract_doc_text
 from docling_ibm_models_spark.pipeline.lineage import (
     committed_partitions,
     run_extraction,
@@ -62,7 +62,7 @@ def test_normalize_text():
 
 def test_spark_extraction_byte_identical(spark):
     pages = pages_from_documents(spark, SF_SMALL)
-    out = doc_text_clean(extract_doc_text(pages))
+    out = extract_doc_text(pages)
     joined = out.join(pages.select("url", F.col("text").alias("expected")), "url")
     total = joined.count()
     mismatches = joined.filter(F.col("extracted_text") != F.col("expected")).count()
@@ -209,7 +209,7 @@ def test_arrow_extraction_matches_kernel(spark):
     flat offset/value arrays, so this pins those offsets."""
     pages = pages_from_documents(spark, SF_SMALL)
     html = {r.url: r.html for r in pages.select("url", "html").collect()}
-    rows = doc_text_clean(extract_doc_text(pages)).collect()
+    rows = extract_doc_text(pages).collect()
     assert len(rows) == len(html) == 500
     for r in rows:
         text, spans = extract_main_content(html[r.url])

@@ -29,8 +29,8 @@ spark = (SparkSession.builder.master("local-cluster[2,2,2048]")
          .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
          .config("spark.python.worker.reuse", "true")
          .getOrCreate())
-from docling_ibm_models_spark.pipeline.extract import doc_text_clean, extract_doc_text
-rows = (doc_text_clean(extract_doc_text(spark.read.parquet(pages_dir)))
+from docling_ibm_models_spark.pipeline.extract import extract_doc_text
+rows = (extract_doc_text(spark.read.parquet(pages_dir))
         .select("url", "extracted_text").collect())
 print(json.dumps({r.url: r.extracted_text for r in rows}, sort_keys=True))
 spark.stop()
@@ -39,17 +39,14 @@ spark.stop()
 
 def test_extraction_on_local_cluster_matches_local(spark, tmp_path):
     # ground truth from the shared-JVM fixture session
-    from docling_ibm_models_spark.pipeline.extract import (
-        doc_text_clean,
-        extract_doc_text,
-    )
+    from docling_ibm_models_spark.pipeline.extract import extract_doc_text
     from docling_ibm_models_spark.sources.pages_source import pages_from_documents
 
     pages_dir = str(tmp_path / "pages")
     pages_from_documents(spark, SF_SMALL, parallelism=4).write.parquet(pages_dir)
     expected = {
         r.url: r.extracted_text
-        for r in doc_text_clean(extract_doc_text(spark.read.parquet(pages_dir)))
+        for r in extract_doc_text(spark.read.parquet(pages_dir))
         .select("url", "extracted_text")
         .collect()
     }

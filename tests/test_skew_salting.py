@@ -19,11 +19,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from docling_ibm_models_spark.pipeline.extract import (
-    doc_text_clean,
-    extract_doc_text,
-    salt_partition,
-)
+from docling_ibm_models_spark.pipeline.extract import extract_doc_text, salt_partition
 from docling_ibm_models_spark.sources.pages_source import (
     cached_pages,
     write_skewed_pages,
@@ -76,9 +72,9 @@ def test_narrow_and_salted_outputs_identical(spark, skew_path):
     """Same rows out of both plans — salting changes the schedule, never
     the result. The salted rows keep their salt bucket as partition_id."""
     pages = spark.read.parquet(skew_path)
-    narrow = doc_text_clean(extract_doc_text(pages)).orderBy("url").collect()
+    narrow = extract_doc_text(pages).orderBy("url").collect()
     salted = (
-        doc_text_clean(extract_doc_text(salt_partition(pages, 8)))
+        extract_doc_text(salt_partition(pages, 8))
         .orderBy("url")
         .collect()
     )

@@ -125,10 +125,7 @@ def test_pages_from_warc_spark_scan(spark, tmp_path):
 def test_extraction_through_warc_path_is_byte_identical(spark, tmp_path):
     """The full north-rule invariant through the WARC on-ramp: archives
     built from the synthetic pages rows extract to byte-identical text."""
-    from docling_ibm_models_spark.pipeline.extract import (
-        doc_text_clean,
-        extract_doc_text,
-    )
+    from docling_ibm_models_spark.pipeline.extract import extract_doc_text
     from docling_ibm_models_spark.sources.pages_source import pages_from_documents
 
     pages = pages_from_documents(spark, SF_SMALL, parallelism=4).limit(120)
@@ -148,7 +145,7 @@ def test_extraction_through_warc_path_is_byte_identical(spark, tmp_path):
         )
 
     scanned = pages_from_warc(spark, str(warc_dir))
-    out = doc_text_clean(extract_doc_text(scanned))
+    out = extract_doc_text(scanned)
     got = {r.url: r.extracted_text for r in out.collect()}
     want = {u: t for u, _, _, t in src}
     assert len(got) == len(src)
@@ -160,10 +157,12 @@ def test_extraction_through_warc_path_is_byte_identical(spark, tmp_path):
 
 
 def test_warc_extraction_path_is_shuffle_free(spark, tmp_path):
-    """The WARC production path — binaryFile scan → mapInPandas parse →
+    """The WARC production path — binaryFile scan → mapInArrow parse →
     mapInArrow extraction — must contain NO Exchange: archive ingestion
-    and extraction stay narrow end to end, exactly like the parquet path."""
+    and extraction stay narrow end to end, exactly like the parquet path.
+    Arrow batches are its only Python boundary, and the WET scan's too."""
     from docling_ibm_models_spark.pipeline.extract import extract_doc_text
+    from docling_ibm_models_spark.sources.warc_source import text_from_wet, write_wet
 
     warc_dir = tmp_path / "w"
     os.makedirs(warc_dir)
@@ -174,6 +173,12 @@ def test_warc_extraction_path_is_shuffle_free(spark, tmp_path):
     plan = plan_of(out)
     assert "Exchange" not in plan, "WARC extraction path gained a shuffle"
     assert "MapInArrow" in plan and "BatchEvalPython" not in plan
+    assert "MapInPandas" not in plan
+    wet_dir = tmp_path / "t"
+    os.makedirs(wet_dir)
+    write_wet(str(wet_dir / "a.warc.wet.gz"), _wet_recs(3), compression="record")
+    wet_plan = plan_of(text_from_wet(spark, str(wet_dir)))
+    assert "MapInArrow" in wet_plan and "MapInPandas" not in wet_plan
 
 
 def test_warc_lineage_and_resume(spark, tmp_path):
@@ -238,10 +243,7 @@ def test_stream_extract_warc_exactly_once_per_archive(spark, tmp_path):
     (checkpointed binaryFile stream), output equals the batch path."""
     from pyspark.sql import functions as F
 
-    from docling_ibm_models_spark.pipeline.extract import (
-        doc_text_clean,
-        extract_doc_text,
-    )
+    from docling_ibm_models_spark.pipeline.extract import extract_doc_text
     from docling_ibm_models_spark.sources.pages_source import pages_from_documents
     from docling_ibm_models_spark.streaming.stream_extract import stream_extract_warc
 
@@ -507,6 +509,54 @@ def test_fetch_warc_bodies_spark_stage(tmp_path, spark):
         assert bytes(r.html) == html
         assert r.warc_ts.replace(tzinfo=dt.timezone.utc) == ts
         assert 0 < r.fetch_bytes <= 256 * 1024
+
+
+def test_fetch_warc_bodies_holds_one_archive_open(tmp_path, monkeypatch):
+    """The fetch task closes an archive as soon as its rows move on to the
+    next one: over offset-sorted rows from 3 archives, at most one file is
+    open at any time, and every handle is closed when the task ends."""
+    import pyarrow as pa
+
+    from docling_ibm_models_spark.sources import warc_source
+
+    cdx_rows = []
+    for i, comp in enumerate(["record", "none", "record"]):
+        p = str(tmp_path / f"a{i}.warc{'' if comp == 'none' else '.gz'}")
+        write_warc(p, _recs(4, salt=f"h{i}-"), compression=comp)
+        with open(p, "rb") as f:
+            cdx_rows += [(p, r[5]) for r in warc_records_to_rows(p, f.read())]
+    cdx_rows.sort()
+
+    open_now, peak, real_open = [0], [0], open
+
+    class Counted:
+        def __init__(self, *args):
+            self._f = real_open(*args)
+            open_now[0] += 1
+            peak[0] = max(peak[0], open_now[0])
+
+        def __getattr__(self, name):
+            return getattr(self._f, name)
+
+        def close(self):
+            if not self._f.closed:
+                open_now[0] -= 1
+            self._f.close()
+
+    monkeypatch.setattr(warc_source, "open", Counted, raising=False)
+    # two input batches, the archive change falling inside the first one
+    batches = [
+        pa.RecordBatch.from_arrays(
+            [pa.array([p for p, _ in part]), pa.array([o for _, o in part], pa.int64())],
+            names=["warc_file", "warc_offset"],
+        )
+        for part in (cdx_rows[:6], cdx_rows[6:])
+    ]
+    out = pa.Table.from_batches(list(warc_source._fetch_records(iter(batches))))
+    assert out.num_rows == len(cdx_rows) == 12
+    assert out.column("warc_file").to_pylist() == [p for p, _ in cdx_rows]
+    assert peak[0] == 1
+    assert open_now[0] == 0
 
 
 # ---------------------------------------------------------------------------
